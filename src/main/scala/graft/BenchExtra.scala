@@ -8,13 +8,15 @@ import java.nio.file.{Files, Paths}
   * headline queries under the exact same session configuration and action
   * (`df.count()`) as Bench's headline phase, with per-query repeats, and
   * optionally dumps `.explain("formatted")` plus the executed (post-AQE)
-  * physical plan to `plans/r06/<query>_<tag>.txt`.
+  * physical plan to `<plans>/<query>_<tag>.txt`.
   *
   * Usage:
-  *   sbt "runMain graft.BenchExtra [tag=before] [reps=3] q_a q_b ..."
+  *   sbt "runMain graft.BenchExtra [tag=before] [reps=3] [plans=<dir>] q_a q_b ..."
+  * `plans=<dir>` turns the plan capture on (one directory per round,
+  * e.g. plans=plans/r07).
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  *      GRAFT_PLANS=1 to write plan files, GRAFT_NOOP=1 to also time the
-  *      noop-sink full materialization (guide §1.4).
+  *      GRAFT_NOOP=1 to also time the noop-sink full materialization
+  *      (guide §1.4).
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -25,10 +27,10 @@ object BenchExtra {
     }.toMap
     val tag = kv.getOrElse("tag", "before")
     val reps = kv.getOrElse("reps", "3").toInt
+    val planDir = kv.get("plans").map(Paths.get(_))
     val names0 = args.filterNot(_.contains("="))
     val names = if (names0.isEmpty || names0.sameElements(Array("all")))
       Bench.headline else names0.toSeq
-    val writePlans = sys.env.get("GRAFT_PLANS").contains("1")
     val noop = sys.env.get("GRAFT_NOOP").contains("1")
 
     // identical to Bench.session(cpus): AQE on, codegen on, 32 shuffle parts
@@ -74,7 +76,7 @@ object BenchExtra {
         }
       })
 
-    if (writePlans) Files.createDirectories(Paths.get("plans/r06"))
+    planDir.foreach(Files.createDirectories(_))
     val results = names.flatMap { n =>
       SparkEntry.queries.get(n).map { fn =>
         spark.sparkContext.setJobDescription(n)
@@ -93,7 +95,7 @@ object BenchExtra {
             System.err.println(s"[benchextra] $n noop failed: ${e.getMessage}") }
           (System.nanoTime() - t0) / 1e9
         } else Nil
-        if (writePlans) {
+        planDir.foreach { dir =>
           val df = fn(spark, sfDir)
           val sb = new StringBuilder
           sb ++= s"== $n @ $sfDir (tag=$tag) ==\n\n"
@@ -107,7 +109,7 @@ object BenchExtra {
             sb ++= df.queryExecution.executedPlan.toString
           } catch { case e: Throwable =>
             sb ++= s"\n[executed-plan capture failed: ${e.getMessage}]\n" }
-          Files.writeString(Paths.get(s"plans/r06/${n}_$tag.txt"), sb.toString)
+          Files.writeString(dir.resolve(s"${n}_$tag.txt"), sb.toString)
         }
         spark.sparkContext.setJobDescription(null)
         (n, times, noopTimes)

@@ -716,6 +716,11 @@ object Dedup {
     * the curation funnel's stage 4, whose decision column is the only
     * thing it consumes; DecontaminateSpec pins set-equality with the
     * counting arm.
+    *
+    * Precondition: `doc_id` is unique in `corpusIn`. Output is one row
+    * per contaminated corpus ROW (no grouping, so the plan stays
+    * aggregate-free); a repeated doc_id would repeat here, where
+    * `decontaminate` groups it to one row.
     */
   def contaminatedDocs(corpusIn: DataFrame, benchmark: DataFrame,
       k: Int = 3): DataFrame = {

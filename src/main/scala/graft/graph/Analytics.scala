@@ -1,5 +1,7 @@
 package graft.graph
 
+import graft.core.SizeGate
+import graft.core.SizeGate.{AnyIds, idLess, idTypeSupported}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -57,8 +59,8 @@ object Analytics {
       maxHops: Int, localCutoff: Int = SmallGraphCutoff): DataFrame = {
     require(maxHops >= 0 && maxHops <= 32, s"maxHops out of range: $maxHops")
     localRankProbe(edges, localCutoff).foreach { case (ix, ea, eb) =>
-      val seedRows = sources.select(col("node")).distinct().take(localCutoff + 1)
-      if (seedRows.length <= localCutoff) {
+      SizeGate.collectIfSmall(sources.select(col("node")).distinct(),
+          localCutoff).foreach { seedRows =>
         // min-hop distances are graph invariants — frontier order cannot
         // change them; seeds outside the edge universe still emit dist 0
         // exactly like the distributed visited set
@@ -71,21 +73,7 @@ object Analytics {
           if (got != null) { dist(got.intValue()) = 0L; queue += got.intValue() }
           else extraSeeds += r.get(0)
         }
-        // CSR over both directions
-        val degC = new Array[Int](ix.n)
-        var e = 0
-        while (e < ea.length) { degC(ea(e)) += 1; degC(eb(e)) += 1; e += 1 }
-        val start = new Array[Int](ix.n + 1)
-        var i = 0
-        while (i < ix.n) { start(i + 1) = start(i) + degC(i); i += 1 }
-        val nbr = new Array[Int](2 * ea.length)
-        val fill = java.util.Arrays.copyOf(start, ix.n)
-        e = 0
-        while (e < ea.length) {
-          nbr(fill(ea(e))) = eb(e); fill(ea(e)) += 1
-          nbr(fill(eb(e))) = ea(e); fill(eb(e)) += 1
-          e += 1
-        }
+        val (start, nbr) = undirectedCsr(ix.n, ea, eb)
         var hop = 1L
         while (queue.nonEmpty && hop <= maxHops) {
           val next = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -103,7 +91,7 @@ object Analytics {
         import org.apache.spark.sql.types._
         val idType = edges.schema("src").dataType
         val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        i = 0
+        var i = 0
         while (i < ix.n) {
           if (dist(i) >= 0L)
             rows.add(org.apache.spark.sql.Row(ix.ids(i), dist(i)))
@@ -175,34 +163,29 @@ object Analytics {
   }
 
   /** Size-adaptive driver fast path shared by the triangle / clustering /
-    * k-core kernels, the [[Components.connectedComponents]] precedent: a
-    * bounded take(cutoff+1) doubles as the size gate and, when the
-    * canonical edge list fits the driver, already holds every row — the
-    * iterative/multi-join distributed kernels collapse to one in-memory
-    * pass with zero additional jobs. Results are IDENTICAL by
-    * construction: per-node triangle membership counts, the k-core and
-    * its internal degrees are graph INVARIANTS (independent of
-    * enumeration order), and the local kernels reproduce the same
-    * integer arithmetic (floor division, long credit sums). Long node
-    * ids only; other id types and larger graphs take the distributed
-    * path unchanged. Cutoff sizing: 2 M canonical edges ≈ 32 MB of probe
-    * rows — driver-sized (under default maxResultSize by 30×), and the
-    * edge-iterator work below it is bounded by Σ min-out-deg ≤ |E|·√|E|
-    * single-threaded ops, seconds at the cutoff — the same order as the
-    * distributed kernel's latency floor on a graph that small.
+    * k-core / link-prediction kernels, gated by [[SizeGate.collectIfSmall]]:
+    * when the canonical edge list fits the driver, the iterative/multi-join
+    * distributed kernels collapse to one in-memory pass with zero
+    * additional jobs. Results are IDENTICAL by construction: per-node
+    * triangle membership counts, the k-core and its internal degrees are
+    * graph INVARIANTS (independent of enumeration order), and the local
+    * kernels reproduce the same integer arithmetic (floor division, long
+    * credit sums). Long node ids only; other id types and larger graphs
+    * take the distributed path unchanged. Cutoff sizing: 2 M canonical
+    * edges ≈ 32 MB of probe rows — driver-sized (under default
+    * maxResultSize by 30×), and the edge-iterator work below it is bounded
+    * by Σ min-out-deg ≤ |E|·√|E| single-threaded ops, seconds at the
+    * cutoff — the same order as the distributed kernel's latency floor on
+    * a graph that small.
     */
   private[graph] val SmallGraphCutoff = 2000000
 
   private def smallCanon(canonRaw: DataFrame,
-      cutoff: Int): Option[Array[(Long, Long)]] = {
-    if (cutoff <= 0) return None
-    if (canonRaw.schema("a").dataType !=
-        org.apache.spark.sql.types.LongType) return None
-    val probe = canonRaw.take(cutoff + 1)
-    if (probe.length <= cutoff)
-      Some(probe.map(r => (r.getLong(0), r.getLong(1))))
-    else None
-  }
+      cutoff: Int): Option[Array[(Long, Long)]] =
+    if (canonRaw.schema("a").dataType != org.apache.spark.sql.types.LongType)
+      None
+    else SizeGate.collectIfSmall(canonRaw, cutoff)
+      .map(_.map(r => (r.getLong(0), r.getLong(1))))
 
   /** Dense-index view of a canonical edge array: node ids remapped to
     * [0, n) ints, edges as parallel int arrays, degrees as an int array —
@@ -236,52 +219,27 @@ object Analytics {
     }
   }
 
-  /** Generic dense indexer for the id-type-agnostic local kernels
-    * (PageRank / PPR / BFS / label propagation run over string OR long
-    * ids): ids map to [0, n) ints once; all iteration state lives in
-    * primitive arrays. Kernel outputs are exact integer recurrences
-    * (long sums are order-free), so the local results are bit-identical
-    * to the distributed ones.
+  /** Undirected CSR adjacency over dense ids: (start, nbr), with node u's
+    * neighbors at nbr(start(u) until start(u + 1)) in edge order.
     */
-  private final class AnyIds {
-    val index = new java.util.HashMap[Any, Integer]()
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def idOf(x: Any): Int = {
-      val got = index.get(x)
-      if (got != null) got.intValue()
-      else { val i = ids.length; index.put(x, i); ids += x; i }
-    }
-    def n: Int = ids.length
-  }
-
-  /** UTF-8 binary (code-point) less-than — Spark's UTF8String and
-    * DuckDB's VARCHAR ordering; Java String.compareTo disagrees on
-    * supplementary characters (the Components comparator, shared here
-    * for the label-propagation min-label tie-break).
-    */
-  private def u8Less(a: String, b: String): Boolean = {
-    val n = math.min(a.length, b.length)
+  private def undirectedCsr(n: Int, ea: Array[Int],
+      eb: Array[Int]): (Array[Int], Array[Int]) = {
+    val deg = new Array[Int](n)
+    var e = 0
+    while (e < ea.length) { deg(ea(e)) += 1; deg(eb(e)) += 1; e += 1 }
+    val start = new Array[Int](n + 1)
     var i = 0
-    while (i < n) {
-      val ca = a.codePointAt(i); val cb = b.codePointAt(i)
-      if (ca != cb) return ca < cb
-      i += Character.charCount(ca)
+    while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
+    val nbr = new Array[Int](2 * ea.length)
+    val fill = java.util.Arrays.copyOf(start, n)
+    e = 0
+    while (e < ea.length) {
+      nbr(fill(ea(e))) = eb(e); fill(ea(e)) += 1
+      nbr(fill(eb(e))) = ea(e); fill(eb(e)) += 1
+      e += 1
     }
-    a.length < b.length
+    (start, nbr)
   }
-
-  /** Id ordering used by the local kernels: numeric for longs, UTF-8
-    * binary for strings (matches Spark's own `<`/min over these types).
-    */
-  private def idLess(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long)     => x < y
-    case (x: String, y: String) => u8Less(x, y)
-    case _ => throw new IllegalStateException("unsupported id type")
-  }
-
-  private def idTypeSupported(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.StringType
 
   /** Open-addressing accumulator over packed long pair keys (0 = empty
     * sentinel): per key a wedge count and an RA-contribution sum, plus an
@@ -521,9 +479,7 @@ object Analytics {
         }.toDF("node", "deg", "n_triangles", "cc_pm")
       case None =>
         // ONE canonicalization + ONE degree aggregation shared with the
-        // triangle kernel (the former composition re-distinct'd the
-        // already-canonical edges into a second checkpoint and re-ran the
-        // degree agg)
+        // triangle kernel
         val canon = canonicalize(edges)
         val deg = degOf(canon).localCheckpoint(true)
         val tri = triangleCountsFromCanon(canon, deg)
@@ -711,18 +667,8 @@ object Analytics {
         val spark = edges.sparkSession
         import spark.implicits._
         // CSR adjacency sorted by ORIGINAL id (pair keys compare long ids)
-        val start = new Array[Int](g.n + 1)
+        val (start, nbr) = undirectedCsr(g.n, g.ea, g.eb)
         var i = 0
-        while (i < g.n) { start(i + 1) = start(i) + g.deg(i); i += 1 }
-        val nbr = new Array[Int](2 * g.m)
-        val fill = java.util.Arrays.copyOf(start, g.n)
-        var e = 0
-        while (e < g.m) {
-          nbr(fill(g.ea(e))) = g.eb(e); fill(g.ea(e)) += 1
-          nbr(fill(g.eb(e))) = g.ea(e); fill(g.eb(e)) += 1
-          e += 1
-        }
-        i = 0
         while (i < g.n) {
           // sort each segment by original node id (Long order)
           val seg = nbr.slice(start(i), start(i + 1))
@@ -755,7 +701,7 @@ object Analytics {
           z += 1
         }
         // mark existing edges so prediction keeps only non-adjacent pairs
-        e = 0
+        var e = 0
         while (e < g.m) {
           // canonical pairs already have ids(ea) < ids(eb)
           acc.markEdge((g.ea(e).toLong << 32) | g.eb(e).toLong); e += 1
@@ -843,84 +789,61 @@ object Analytics {
   def labelPropagation(edges: DataFrame, rounds: Int,
       localCutoff: Int = SmallGraphCutoff): DataFrame = {
     require(rounds >= 1 && rounds <= 32, s"rounds out of range: $rounds")
-    if (localCutoff > 0 && idTypeSupported(edges.schema("src").dataType)) {
-      val probe = canonicalizeRaw(edges).take(localCutoff + 1)
-      if (probe.length <= localCutoff) {
-        // synchronous rounds over the canonical simple graph; the pick
-        // per node is (max neighbor-label count, min label) — the min
-        // label under Spark's own ordering (numeric / UTF-8 binary),
-        // deterministic, so rounds replay bit-identically
-        val ix = new AnyIds
-        val ea = new Array[Int](probe.length)
-        val eb = new Array[Int](probe.length)
-        var i = 0
-        while (i < probe.length) {
-          ea(i) = ix.idOf(probe(i).get(0)); eb(i) = ix.idOf(probe(i).get(1))
-          i += 1
-        }
-        val n = ix.n
-        val degC = new Array[Int](n)
-        var e = 0
-        while (e < ea.length) { degC(ea(e)) += 1; degC(eb(e)) += 1; e += 1 }
-        val start = new Array[Int](n + 1)
-        i = 0
-        while (i < n) { start(i + 1) = start(i) + degC(i); i += 1 }
-        val nbr = new Array[Int](2 * ea.length)
-        val fill = java.util.Arrays.copyOf(start, n)
-        e = 0
-        while (e < ea.length) {
-          nbr(fill(ea(e))) = eb(e); fill(ea(e)) += 1
-          nbr(fill(eb(e))) = ea(e); fill(eb(e)) += 1
-          e += 1
-        }
-        var labels = Array.tabulate(n)(identity) // own id
-        for (_ <- 1 to rounds) {
-          val next = new Array[Int](n)
-          val cnt = new java.util.HashMap[Integer, Integer]()
-          var u = 0
-          while (u < n) {
-            cnt.clear()
-            var p = start(u)
-            while (p < start(u + 1)) {
-              val l = labels(nbr(p))
-              val c = cnt.get(l)
-              cnt.put(l, if (c == null) 1 else c.intValue() + 1)
-              p += 1
-            }
-            // (max count, min label by id order)
-            var bestLbl = -1
-            var bestCnt = 0
-            val it = cnt.entrySet().iterator()
-            while (it.hasNext) {
-              val en = it.next()
-              val l = en.getKey.intValue(); val c = en.getValue.intValue()
-              if (c > bestCnt || (c == bestCnt &&
-                  (bestLbl < 0 || idLess(ix.ids(l), ix.ids(bestLbl)))))
-                { bestCnt = c; bestLbl = l }
-            }
-            next(u) = bestLbl // every canonical-graph node has >= 1 nbr
-            u += 1
+    val canon = canonicalizeRaw(edges)
+    val small =
+      if (idTypeSupported(edges.schema("src").dataType))
+        SizeGate.collectIfSmall(canon, localCutoff)
+      else None
+    small.foreach { probe =>
+      // synchronous rounds over the canonical simple graph; the pick
+      // per node is (max neighbor-label count, min label) — the min
+      // label under Spark's own ordering (numeric / UTF-8 binary),
+      // deterministic, so rounds replay bit-identically
+      val (ix, ea, eb) = AnyIds.ofEdges(probe)
+      val n = ix.n
+      val (start, nbr) = undirectedCsr(n, ea, eb)
+      var labels = Array.tabulate(n)(identity) // own id
+      for (_ <- 1 to rounds) {
+        val next = new Array[Int](n)
+        val cnt = new java.util.HashMap[Integer, Integer]()
+        var u = 0
+        while (u < n) {
+          cnt.clear()
+          var p = start(u)
+          while (p < start(u + 1)) {
+            val l = labels(nbr(p))
+            val c = cnt.get(l)
+            cnt.put(l, if (c == null) 1 else c.intValue() + 1)
+            p += 1
           }
-          labels = next
+          // (max count, min label by id order)
+          var bestLbl = -1
+          var bestCnt = 0
+          val it = cnt.entrySet().iterator()
+          while (it.hasNext) {
+            val en = it.next()
+            val l = en.getKey.intValue(); val c = en.getValue.intValue()
+            if (c > bestCnt || (c == bestCnt &&
+                (bestLbl < 0 || idLess(ix.ids(l), ix.ids(bestLbl)))))
+              { bestCnt = c; bestLbl = l }
+          }
+          next(u) = bestLbl // every canonical-graph node has >= 1 nbr
+          u += 1
         }
-        import org.apache.spark.sql.types._
-        val idType = edges.schema("src").dataType
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-        i = 0
-        while (i < n) {
-          rows.add(org.apache.spark.sql.Row(ix.ids(i), ix.ids(labels(i))))
-          i += 1
-        }
-        return edges.sparkSession.createDataFrame(rows,
-          StructType(Seq(StructField("node", idType),
-            StructField("label", idType))))
+        labels = next
       }
+      import org.apache.spark.sql.types._
+      val idType = edges.schema("src").dataType
+      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
+      var i = 0
+      while (i < n) {
+        rows.add(org.apache.spark.sql.Row(ix.ids(i), ix.ids(labels(i))))
+        i += 1
+      }
+      return edges.sparkSession.createDataFrame(rows,
+        StructType(Seq(StructField("node", idType),
+          StructField("label", idType))))
     }
-    val canon = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
     // both directions in ONE pass via explode — a self-union would
     // re-execute the distinct once per branch (no cross-branch CSE)
     val nbr = canon.select(explode(array(
@@ -1046,21 +969,10 @@ object Analytics {
     * the distributed join does). Returns (indexer, srcIdx, dstIdx).
     */
   private def localRankProbe(edges: DataFrame,
-      cutoff: Int): Option[(AnyIds, Array[Int], Array[Int])] = {
-    if (cutoff <= 0) return None
-    if (!idTypeSupported(edges.schema("src").dataType)) return None
-    val probe = edges.select(col("src"), col("dst")).take(cutoff + 1)
-    if (probe.length > cutoff) return None
-    val ix = new AnyIds
-    val ea = new Array[Int](probe.length)
-    val eb = new Array[Int](probe.length)
-    var i = 0
-    while (i < probe.length) {
-      ea(i) = ix.idOf(probe(i).get(0)); eb(i) = ix.idOf(probe(i).get(1))
-      i += 1
-    }
-    Some((ix, ea, eb))
-  }
+      cutoff: Int): Option[(AnyIds, Array[Int], Array[Int])] =
+    if (!idTypeSupported(edges.schema("src").dataType)) None
+    else SizeGate.collectIfSmall(edges.select(col("src"), col("dst")), cutoff)
+      .map(AnyIds.ofEdges)
 
   /** The exact integer PageRank recurrence on dense arrays. With
     * `seedMask == null` every node is seeded (global fixed-point PR);
@@ -1119,8 +1031,8 @@ object Analytics {
     localRankProbe(edges, localCutoff).foreach { case (ix, ea, eb) =>
       // seed rows outside the edge-derived universe are ignored, exactly
       // like the distributed left join onto the node frame
-      val seedRows = seeds.select(col("node")).distinct().take(localCutoff + 1)
-      if (seedRows.length <= localCutoff) {
+      SizeGate.collectIfSmall(seeds.select(col("node")).distinct(),
+          localCutoff).foreach { seedRows =>
         val mask = new Array[Boolean](ix.n)
         seedRows.foreach { r =>
           val got = ix.index.get(r.get(0))

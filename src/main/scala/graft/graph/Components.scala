@@ -1,8 +1,9 @@
 package graft.graph
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Mapping graph construction and connected-component canonicalization.
   *
@@ -47,11 +48,19 @@ object Components {
 
   /** Undirected connected components by iterative min-label propagation.
     *
+    * Inputs of at most `localCutoff` distinct undirected edges (long or
+    * string ids) take a driver-side union-find through [[SizeGate]]:
+    * near-dup pair sets are a small fraction of the corpus, and O(diameter)
+    * Spark rounds at that size are pure scheduler latency. Labels are
+    * identical either way: the union keeps the smaller root under Spark's
+    * own id order ([[SizeGate.idLess]]), so every root is its component's
+    * min member. `localCutoff = 0` forces the distributed rounds.
+    *
     * @return (node, component) with component = lexicographic min member id.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      alreadySymmetric: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
+      alreadySymmetric: Boolean = false,
+      localCutoff: Int = 1000000): DataFrame = {
     // undirected view + dedup once up front (skip the reverse union when
     // the caller guarantees symmetric input — e.g. equivalence edges)
     val und0 =
@@ -60,93 +69,46 @@ object Components {
         .union(edges.select(col("dst").as("src"), col("src").as("dst")))
     val undDistinct = und0.distinct()
 
-    // Size-adaptive fast path: near-dup pair sets are a small fraction of
-    // the corpus (the whole premise of pairs→CC→keep), so the edge list
-    // frequently fits the driver even when the corpus never would. A
-    // driver-side union-find replaces O(diameter) Spark rounds — each a
-    // job + checkpoint of pure scheduler latency at these sizes — with
-    // ONE bounded take(cutoff+1): it doubles as the size gate (driver
-    // memory stays capped exactly as the old count() gate capped it) and,
-    // when the edge list is small, already holds every row — replacing
-    // the old checkpoint + count + collect THREE-job sequence (r6; at
-    // corpus scale the probe reads only enough post-shuffle partitions
-    // to exceed the cutoff, then the distributed path re-materializes
-    // the distinct once, as before). Labels are
-    // IDENTICAL (min member id per component): long ids use numeric min;
-    // string ids use UTF-8 binary (= code-point) min, which is exactly
-    // the ordering of Spark's UTF8String.compareTo AND DuckDB's VARCHAR
-    // comparison — NOT Java's String.compareTo, whose UTF-16 code-unit
-    // order disagrees for supplementary characters, hence the explicit
-    // comparator.
-    val smallCutoff = 1000000
     val idType = undDistinct.schema("src").dataType
-    val probe: Array[Row] =
-      if (idType == org.apache.spark.sql.types.LongType ||
-          idType == org.apache.spark.sql.types.StringType)
-        undDistinct.take(smallCutoff + 1)
-      else Array.empty
-    if (idType == org.apache.spark.sql.types.LongType &&
-        probe.length <= smallCutoff) {
-      val rows = probe
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x0: Long): Long = {
+    val small =
+      if (SizeGate.idTypeSupported(idType))
+        SizeGate.collectIfSmall(undDistinct, localCutoff)
+      else None
+    small.foreach { rows =>
+      val (ix, ea, eb) = SizeGate.AnyIds.ofEdges(rows)
+      val parent = Array.tabulate(ix.n)(identity)
+      def find(x0: Int): Int = {
         var x = x0
-        while (parent.getOrElse(x, x) != x) {
-          val p = parent(x)
-          parent(x) = parent.getOrElse(p, p) // path halving
+        while (parent(x) != x) {
+          parent(x) = parent(parent(x)) // path halving
           x = parent(x)
         }
         x
       }
-      rows.foreach { r =>
-        val a = find(r.getLong(0)); val b = find(r.getLong(1))
-        // union by min: the root of every set is its minimum member
-        if (a != b) parent(math.max(a, b)) = math.min(a, b)
-      }
-      // component label = min member; with union-by-min the root IS the
-      // minimum id of its component
-      val srcNodes = rows.map(_.getLong(0)).distinct
-      import spark.implicits._
-      return srcNodes.map(nd => (nd, find(nd))).toSeq.toDF("node", "comp")
-    }
-    if (idType == org.apache.spark.sql.types.StringType &&
-        probe.length <= smallCutoff) {
-      // UTF-8 binary less-than: code-point comparison (equal prefixes
-      // advance both cursors identically, so one shared index is safe)
-      def u8Less(a: String, b: String): Boolean = {
-        val n = math.min(a.length, b.length)
-        var i = 0
-        while (i < n) {
-          val ca = a.codePointAt(i); val cb = b.codePointAt(i)
-          if (ca != cb) return ca < cb
-          i += Character.charCount(ca)
-        }
-        a.length < b.length
-      }
-      val rows = probe
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x0: String): String = {
-        var x = x0
-        while (parent.getOrElse(x, x) != x) {
-          val p = parent(x)
-          parent(x) = parent.getOrElse(p, p) // path halving
-          x = parent(x)
-        }
-        x
-      }
-      rows.foreach { r =>
-        val a = find(r.getString(0)); val b = find(r.getString(1))
+      // labels cover src endpoints only, like the distributed groupBy(src)
+      val isSrc = new Array[Boolean](ix.n)
+      var e = 0
+      while (e < ea.length) {
+        isSrc(ea(e)) = true
+        val a = find(ea(e)); val b = find(eb(e))
         if (a != b) {
-          if (u8Less(a, b)) parent(b) = a else parent(a) = b
+          if (SizeGate.idLess(ix.ids(a), ix.ids(b))) parent(b) = a
+          else parent(a) = b
         }
+        e += 1
       }
-      val srcNodes = rows.map(_.getString(0)).distinct
-      import spark.implicits._
-      return srcNodes.map(nd => (nd, find(nd))).toSeq.toDF("node", "comp")
+      val out = new java.util.ArrayList[Row]()
+      var i = 0
+      while (i < ix.n) {
+        if (isSrc(i)) out.add(Row(ix.ids(i), ix.ids(find(i))))
+        i += 1
+      }
+      return edges.sparkSession.createDataFrame(out, StructType(Seq(
+        StructField("node", idType), StructField("comp", idType))))
     }
 
     // distributed path: the loop re-reads the edge set every round, so
-    // materialize it once (the probe above read at most cutoff+1 rows)
+    // materialize it once
     val und = undDistinct.localCheckpoint(true)
 
     // round 1 fused into initialization: label = min(self, direct

@@ -55,6 +55,10 @@ object Curation {
 
   /** Per-document curation decision: (doc_id, decision).
     *
+    * Precondition: `doc_id` is unique in `corpusIn` (stage 4's
+    * [[graft.dedup.Dedup.contaminatedDocs]] flags rows, and a repeated
+    * doc_id would fan out the left join on doc_id).
+    *
     * @param corpusIn   documents to curate (doc_id, text, …)
     * @param benchmark  held-out evaluation documents to decontaminate
     *                   against (never appear in the output)

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.SizeGate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -106,20 +107,19 @@ object BpeTrain {
     var words = wordFreq(docs, textCol)
       .select(symsUdf(col("word")).as("syms"), col("freq"))
       .localCheckpoint(true)
-    // Size-adaptive fast path (the Components.connectedComponents
-    // union-find precedent): the dictionary is VOCABULARY-sized — orders
-    // of magnitude under the corpus — and when it fits the driver, the
-    // greedy merge loop runs in memory over the collected (syms, freq)
-    // rows instead of 2 Spark jobs per merge (pair agg + rewrite
-    // checkpoint), which at small dictionaries is pure scheduler
-    // latency. The loop below IS the reference trainer the distributed
-    // rounds are spec-equal to (BpeTrainSpec): same leftmost applyMerge,
-    // same (freq desc, left asc, right asc) argmax — the merge sequence
-    // is identical by construction. Large dictionaries keep the
-    // distributed rounds.
-    if (words.count() <= smallDictCutoff) {
-      var mem: Array[(Seq[String], Long)] = words.collect()
-        .map(r => (r.getSeq[String](0), r.getLong(1)))
+    // Size-adaptive fast path (gated by SizeGate.collectIfSmall): the
+    // dictionary is VOCABULARY-sized — orders of magnitude under the
+    // corpus — and when it fits the driver, the greedy merge loop runs in
+    // memory over the collected (syms, freq) rows instead of 2 Spark jobs
+    // per merge (pair agg + rewrite checkpoint), which at small
+    // dictionaries is pure scheduler latency. The loop below IS the
+    // reference trainer the distributed rounds are spec-equal to
+    // (BpeTrainSpec): same leftmost applyMerge, same (freq desc, left asc,
+    // right asc) argmax — the merge sequence is identical by construction.
+    // Large dictionaries keep the distributed rounds.
+    SizeGate.collectIfSmall(words, smallDictCutoff).foreach { rows =>
+      var mem: Array[(Seq[String], Long)] =
+        rows.map(r => (r.getSeq[String](0), r.getLong(1)))
       val merges = Seq.newBuilder[Merge]
       var rank = 1
       var exhausted = false
@@ -136,19 +136,12 @@ object BpeTrain {
         }
         if (counts.isEmpty) exhausted = true
         else {
-          // argmax by (freq desc, left asc, right asc) with the STRING
-          // order Spark's orderBy uses — UTF-8 binary = code-point order
-          // (Java String.compareTo is UTF-16 code-unit order, which
-          // disagrees for supplementary vs U+E000.. BMP symbols)
-          def u8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          def less(a: ((String, String), Long), b: ((String, String), Long)): Boolean = {
+          // argmax by (freq desc, left asc, right asc) in the string
+          // order Spark's orderBy uses (UTF-8 binary)
+          def less(a: ((String, String), Long), b: ((String, String), Long)): Boolean =
             if (a._2 != b._2) a._2 > b._2
-            else {
-              val cl = java.util.Arrays.compare(u8(a._1._1), u8(b._1._1))
-              if (cl != 0) cl < 0
-              else java.util.Arrays.compare(u8(a._1._2), u8(b._1._2)) < 0
-            }
-          }
+            else if (a._1._1 != b._1._1) SizeGate.u8Less(a._1._1, b._1._1)
+            else SizeGate.u8Less(a._1._2, b._1._2)
           val ((l, r), f) = counts.reduceLeft((a, b) => if (less(b, a)) b else a)
           merges += Merge(rank, l, r, f)
           mem = mem.map { case (syms, fr) => (applyMerge(syms, l, r), fr) }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.SizeGate
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -90,18 +91,16 @@ object QualityTrain {
     val features = featurize(docs, textCol, labelCol, idCol, dim, salt)
       .localCheckpoint(true)
 
-    // Size-adaptive driver fast path (the Components/Analytics pattern):
+    // Size-adaptive driver fast path (gated by SizeGate.collectIfSmall):
     // full-batch GD is iters sequential Spark jobs of pure scheduler
     // latency when the FEATURIZED table (one compact row per doc, text
-    // already dropped) fits the driver. One bounded take gates it; the
-    // epoch arithmetic below is the same per-doc margin/residual/loss
-    // kernel, and gradient summation order differs only within the
-    // documented float-reduce nondeterminism this operator already
-    // carries (witness-checked, not oracled — scaladoc above). The
-    // distributed epoch loop is unchanged above the cutoff.
-    val probe = if (localCutoff > 0) features.take(localCutoff + 1)
-      else Array.empty[Row]
-    if (localCutoff > 0 && probe.length <= localCutoff) {
+    // already dropped) fits the driver. The epoch arithmetic below is the
+    // same per-doc margin/residual/loss kernel, and gradient summation
+    // order differs only within the documented float-reduce
+    // nondeterminism this operator already carries (witness-checked, not
+    // oracled — scaladoc above). The distributed epoch loop is unchanged
+    // above the cutoff.
+    SizeGate.collectIfSmall(features, localCutoff).foreach { probe =>
       val nDocs = probe.length.toDouble
       require(nDocs > 0, "no non-empty documents to train on")
       val bks = probe.map(_.getAs[collection.Seq[Int]]("buckets").toArray)

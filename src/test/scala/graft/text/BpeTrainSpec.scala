@@ -72,6 +72,21 @@ class BpeTrainSpec extends SparkSpec {
       .map(m => (m.left, m.right, m.freq))
     assert(gotDist == want,
       "distributed rounds must equal the in-memory fast path")
+    // ties broken in UTF-8 binary order on both paths: 'a' (0x61) sorts
+    // before 'é' (0xC3 0xA9, negative as a signed byte), and U+E000
+    // (0xEE..) before U+1D11E (0xF0..; first in UTF-16 order)
+    val clef = new String(Character.toChars(0x1D11E))
+    for ((text, first) <- Seq(("ax \u00E9x", ("a", "x", 1L)),
+        (s"\uE000x ${clef}x", ("\uE000", "x", 1L)))) {
+      val tie = Seq((1L, text)).toDF("doc_id", "text")
+      val fast = BpeTrain.train(tie, nMerges = 1)
+        .map(m => (m.left, m.right, m.freq))
+      val dist = BpeTrain.train(tie, nMerges = 1, smallDictCutoff = 0L)
+        .map(m => (m.left, m.right, m.freq))
+      assert(dist == Seq(first), s"distributed tie-break on '$text'")
+      assert(fast == dist, s"fast path must break the tie on '$text' " +
+        "like the distributed rounds")
+    }
   }
 
   test("initialPairCounts equals merge 1's candidate table") {
