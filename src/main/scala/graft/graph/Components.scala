@@ -24,9 +24,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * components would need full distributed SCC, which the input shape does
   * not produce; singleton SCCs match by construction).
   *
-  * Scale: min-label propagation converges in O(max component diameter)
-  * rounds; mapping cliques are shallow. Each round is one shuffle on the
-  * node id; `localCheckpoint` truncates lineage per round (SURVEY §2.9).
+  * Scale: one CC kernel. Edge sets up to the [[SizeGate]] cutoff take a
+  * driver-side union-find; larger ones run large-star/small-star, which
+  * converges in O(log² n) rounds regardless of component diameter. Each
+  * round is materialized once; `localCheckpoint` truncates lineage per
+  * round (SURVEY §2.9).
   */
 object Components {
   import Schema._
@@ -46,33 +48,34 @@ object Components {
       .select(col("e.src"), col("e.dst"))
   }
 
-  /** Undirected connected components by iterative min-label propagation.
+  /** Undirected connected components: the one CC kernel.
     *
-    * Inputs of at most `localCutoff` distinct undirected edges (long or
-    * string ids) take a driver-side union-find through [[SizeGate]]:
-    * near-dup pair sets are a small fraction of the corpus, and O(diameter)
-    * Spark rounds at that size are pure scheduler latency. Labels are
-    * identical either way: the union keeps the smaller root under Spark's
-    * own id order ([[SizeGate.idLess]]), so every root is its component's
-    * min member. `localCutoff = 0` forces the distributed rounds.
+    * The input is reduced once to its distinct undirected edges
+    * `(least(src, dst), greatest(src, dst))`, self-loops kept. At most
+    * `localCutoff` of them (long or string ids) take a driver-side
+    * union-find through [[SizeGate]]: near-dup pair sets are a small
+    * fraction of the corpus, and Spark rounds at that size are pure
+    * scheduler latency. Larger sets run alternating large-star/small-star
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14), which converges in O(log² n) rounds whatever the component
+    * diameter. Each round is partial-agg groupBys plus equi-joins,
+    * materialized once; no giant component concentrates on one task.
+    * Labels are identical either way: the union keeps the smaller root
+    * under Spark's own id order ([[SizeGate.idLess]]). `localCutoff = 0`
+    * forces the distributed rounds.
     *
-    * @return (node, component) with component = lexicographic min member id.
+    * @return (node, component) for every edge endpoint, with component =
+    *         the component's min member id.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      alreadySymmetric: Boolean = false,
+  def connectedComponents(edges: DataFrame, maxIter: Int = 30,
       localCutoff: Int = 1000000): DataFrame = {
-    // undirected view + dedup once up front (skip the reverse union when
-    // the caller guarantees symmetric input — e.g. equivalence edges)
-    val und0 =
-      if (alreadySymmetric) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val undDistinct = und0.distinct()
+    val und = edges.select(least(col("src"), col("dst")).as("src"),
+      greatest(col("src"), col("dst")).as("dst")).distinct()
 
-    val idType = undDistinct.schema("src").dataType
+    val idType = und.schema("src").dataType
     val small =
       if (SizeGate.idTypeSupported(idType))
-        SizeGate.collectIfSmall(undDistinct, localCutoff)
+        SizeGate.collectIfSmall(und, localCutoff)
       else None
     small.foreach { rows =>
       val (ix, ea, eb) = SizeGate.AnyIds.ofEdges(rows)
@@ -85,11 +88,8 @@ object Components {
         }
         x
       }
-      // labels cover src endpoints only, like the distributed groupBy(src)
-      val isSrc = new Array[Boolean](ix.n)
       var e = 0
       while (e < ea.length) {
-        isSrc(ea(e)) = true
         val a = find(ea(e)); val b = find(eb(e))
         if (a != b) {
           if (SizeGate.idLess(ix.ids(a), ix.ids(b))) parent(b) = a
@@ -100,82 +100,25 @@ object Components {
       val out = new java.util.ArrayList[Row]()
       var i = 0
       while (i < ix.n) {
-        if (isSrc(i)) out.add(Row(ix.ids(i), ix.ids(find(i))))
+        out.add(Row(ix.ids(i), ix.ids(find(i))))
         i += 1
       }
       return edges.sparkSession.createDataFrame(out, StructType(Seq(
         StructField("node", idType), StructField("comp", idType))))
     }
 
-    // distributed path: the loop re-reads the edge set every round, so
-    // materialize it once
-    val und = undDistinct.localCheckpoint(true)
-
-    // round 1 fused into initialization: label = min(self, direct
-    // neighbors) — one job instead of init-checkpoint + first iteration
-    var labels = und
-      .groupBy(col("src").as("node"))
-      .agg(least(min(col("dst")), first(col("src"))).as("comp"))
-      .localCheckpoint(true)
-
-    var converged = false
-    var iter = 1
-    while (!converged && iter < maxIter) {
-      // min neighbor label per node, folded with the old label; the
-      // convergence count rides the SAME materialization job via
-      // Dataset.observe — one Spark job per round total
-      val obs = org.apache.spark.sql.Observation(s"cc_$iter")
-      val nbrMin = und.join(labels.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(min("comp").as("nbr_comp"))
-        .withColumnRenamed("dst", "node")
-      val updated = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-          (coalesce(col("nbr_comp"), col("comp")) < col("comp")).as("changed"))
-        .observe(obs, sum(col("changed").cast("long")).as("changes"))
-        .localCheckpoint(true)
-      val changes = obs.get.get("changes").map {
-        case null => 0L
-        case l: java.lang.Long => l.longValue()
-        case other => other.toString.toLong
-      }.getOrElse(0L)
-      labels = updated.drop("changed")
-      converged = changes == 0
-      iter += 1
-    }
-    if (!converged)
-      // diameter exceeded the round cap — labels would be silently wrong
-      throw new IllegalStateException(
-        s"min-label CC did not converge in $maxIter rounds (graph diameter " +
-          "too large) — use connectedComponentsStar, which converges in " +
-          "O(log² n) rounds regardless of diameter")
-    labels
-  }
-
-  /** Undirected connected components by alternating large-star/small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the scale path for DEEP graphs: converges in
-    * O(log² n) rounds independent of component diameter, where min-label
-    * propagation needs O(diameter) rounds. Each half-round is a
-    * partial-agg groupBy + an equi-join (AQE-splittable); no giant
-    * component ever concentrates on one task. Mapping cliques are
-    * shallow, so `connectedComponents` stays the default; this is the
-    * drop-in alternative when components may be long chains.
-    *
-    * @return (node, component) with component = min member id, for every
-    *         edge endpoint (same contract as `connectedComponents`).
-    */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
-
-    def checksum(d: DataFrame): (Long, String) = {
-      // decimal sum: ANSI mode throws on long overflow
-      val r = d.agg(count(lit(1)),
-        sum(xxhash64(col("src"), col("dst")).cast("decimal(27,0)")))
-        .collect()(0)
-      (r.getLong(0), String.valueOf(r.get(1)))
+    // distributed path. Every round materializes its edge set once; the
+    // convergence checksum over the non-self-loop rows rides the same job
+    // via Dataset.observe. The checksum sum is decimal: ANSI mode throws
+    // on long overflow.
+    val loopFree = col("src") =!= col("dst")
+    def checkpoint(d: DataFrame, name: String): (DataFrame, (Long, String)) = {
+      val obs = org.apache.spark.sql.Observation(name)
+      val m = d.observe(obs, count(when(loopFree, lit(1))).as("n"),
+        sum(when(loopFree, xxhash64(col("src"), col("dst")))
+          .cast("decimal(27,0)")).as("h")).localCheckpoint(true)
+      val r = obs.get
+      (m, (r("n").asInstanceOf[Long], String.valueOf(r("h"))))
     }
 
     def largeStar(d: DataFrame): DataFrame = {
@@ -186,7 +129,7 @@ object Components {
       nbrs.join(mins, "src")
         .filter(col("dst") > col("src"))
         .select(col("dst").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
+        .filter(loopFree)
         .distinct()
     }
 
@@ -199,28 +142,32 @@ object Components {
         .select(col("v").as("src"), col("m").as("dst"))
       val fromSelf = mins.select(col("u").as("src"), col("m").as("dst"))
       fromNbrs.union(fromSelf)
-        .filter(col("src") =!= col("dst"))
+        .filter(loopFree)
         .distinct()
     }
 
-    var prev = checksum(e)
+    val (all, sum0) = checkpoint(und, "cc_0")
+    var e = all.filter(loopFree)
+    var prev = sum0
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      e = smallStar(largeStar(e)).localCheckpoint(true)
-      val cur = checksum(e)
-      converged = cur == prev
-      prev = cur
       iter += 1
+      val (next, cur) = checkpoint(smallStar(largeStar(e)), s"cc_$iter")
+      converged = cur == prev
+      e = next; prev = cur
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds — " +
+        s"connected components did not converge in $maxIter rounds — " +
           "refusing to return labels from an unconverged edge set; raise " +
           "maxIter (expected rounds grow O(log² n))")
-    // fixpoint: every edge is (node → component root)
+    // fixpoint: every edge is (node → component root); self-loop-only
+    // endpoints are their own root
     e.select(col("src").as("node"), col("dst").as("comp"))
       .union(e.select(col("dst").as("node"), col("dst").as("comp")))
+      .union(all.filter(col("src") === col("dst"))
+        .select(col("src").as("node"), col("dst").as("comp")))
       .groupBy("node").agg(min("comp").as("comp"))
   }
 
@@ -236,15 +183,14 @@ object Components {
       else toEdges(df).localCheckpoint(true)
     // seed CC with the undirected (reciprocal) subgraph: a directed edge
     // whose reverse is also present behaves undirected. When the caller
-    // guarantees symmetric edges (e.g. exactMatch-only graphs), skip the
+    // guarantees undirected edges (e.g. exactMatch-only graphs), skip the
     // reciprocal check and the directed-cycle merge loop entirely — fewer
     // fixed-cost jobs in the hot path.
     val reciprocal =
       if (assumeUndirected) edges
       else edges.intersect(
         edges.select(col("dst").as("src"), col("src").as("dst")))
-    val cc = connectedComponents(reciprocal,
-      alreadySymmetric = assumeUndirected)
+    val cc = connectedComponents(reciprocal)
     // in the undirected case every node of df IS an edge endpoint, so the
     // CC labels are already complete — skip the widening join
     var labels =
@@ -262,9 +208,10 @@ object Components {
 
     // component-level condensation: merge components linked by a directed
     // 2-cycle (u→v and v→u across components); iterate to a fixpoint
+    // every pass that finds a mutual pair merges at least two components,
+    // so the loop ends within (#components - 1) passes
     var done = assumeUndirected
-    var guard = 0
-    while (!done && guard < 10) {
+    while (!done) {
       val lSrc = labels.select(col("node").as("src"), col("comp").as("c_src"))
       val lDst = labels.select(col("node").as("dst"), col("comp").as("c_dst"))
       val compEdges = edges.join(lSrc, "src").join(lDst, "dst")
@@ -277,12 +224,11 @@ object Components {
         val merged = connectedComponents(
           mutual.select(col("c_src").as("src"), col("c_dst").as("dst")))
         labels = labels.join(
-          merged.withColumnRenamed("node", "comp")
-            .withColumnRenamed("comp", "newComp"), Seq("comp"), "left")
+          merged.select(col("node").as("comp"), col("comp").as("newComp")),
+          Seq("comp"), "left")
           .select(col("node"),
             coalesce(col("newComp"), col("comp")).as("comp"))
           .localCheckpoint(true)
-        guard += 1
       }
     }
     labels
