@@ -6,7 +6,10 @@ Usage: check_oracle.py <sfdir> <verify_out_dir> [q_a q_b ...]
 Registers every parquet in <sfdir> as a DuckDB view named after the file
 basename, runs each oracle SQL from <verify_out_dir>/oracle_sql.json, and
 compares row count + sorted full-row multiset against the Spark dump in
-<verify_out_dir>/<query>/.
+<verify_out_dir>/<query>/. A query with no Spark dump is MISSING and
+counts as a failure: graft.Verify logs and skips a query that throws, so
+an absent dump is a crashed query. Naming queries checks only those.
+Ends with an "N/M OK" summary; exits 1 unless every checked query is OK.
 """
 import sys, json, glob, os
 import duckdb
@@ -20,13 +23,15 @@ for p in glob.glob(os.path.join(sfdir, "*.parquet")):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
-fail = 0
+fail = checked = 0
 for q, sql in sorted(oracle.items()):
     if only and q not in only:
         continue
+    checked += 1
     spark_dir = os.path.join(outdir, q)
     if not os.path.isdir(spark_dir):
-        print(f"{q}: SKIP (no spark dump)")
+        print(f"{q}: MISSING (no spark dump)")
+        fail += 1
         continue
     try:
         o = con.execute(sql).fetch_df()
@@ -49,5 +54,10 @@ for q, sql in sorted(oracle.items()):
         fail += 1
     print(f"{q}: {status} rows spark={len(s)} oracle={len(o)} "
           f"schema={ok_schema} hash={ok_hash}")
-print("FAIL" if fail else "ALL OK")
-sys.exit(1 if fail else 0)
+if only:
+    for q in sorted(only - oracle.keys()):
+        print(f"{q}: MISSING (no oracle sql)")
+        checked += 1
+        fail += 1
+print(f"{checked - fail}/{checked} OK")
+sys.exit(1 if fail or not checked else 0)

@@ -24,8 +24,23 @@ object SizeGate {
   }
 
   /** Id types the local kernels can order exactly like Spark does. */
-  private[graft] def idTypeSupported(dt: DataType): Boolean =
+  private def idTypeSupported(dt: DataType): Boolean =
     dt == LongType || dt == StringType
+
+  /** The driver-local view of an edge list, shared by every graph fast
+    * path: when its two leading columns are long or string ids of one
+    * type and it holds at most `maxRows` rows, the rows indexed by
+    * [[AnyIds.ofEdges]]; else None, and the caller runs its distributed
+    * kernel. Directed kernels pass (src, dst) with multiplicity,
+    * undirected ones their canonical edge set.
+    */
+  private[graft] def localGraph(edges: DataFrame,
+      maxRows: Long): Option[(AnyIds, Array[Int], Array[Int])] = {
+    val idType = edges.schema(0).dataType
+    if (idTypeSupported(idType) && edges.schema(1).dataType == idType)
+      collectIfSmall(edges, maxRows).map(AnyIds.ofEdges)
+    else None
+  }
 
   /** UTF-8 binary (code-point) less-than: the order of Spark's
     * UTF8String and DuckDB's VARCHAR. Java's String.compareTo (UTF-16

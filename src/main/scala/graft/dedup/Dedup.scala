@@ -912,9 +912,11 @@ object Dedup {
         col("n_shared"), col("containment"))
   }
 
-  /** Canonical-survivor selection after near-dup clustering: keep the
-    * lowest doc_id of each connected dup-group (union by repeated min —
-    * one window pass suffices for pairwise near-dup output).
+  /** Survivor selection straight from a pair list, with no clustering:
+    * drop every document that appears as the higher id (`doc_b`) of some
+    * pair and keep the rest. For a chain a~b, b~c (a < b < c) that keeps
+    * only a; for a~c, b~c it keeps both a and b, although the three form
+    * one connected dup-group. [[nearDupDedup]] keeps one per group.
     */
   def survivors(documents: DataFrame, dups: DataFrame): DataFrame = {
     val loser = dups.select(col("doc_b").as("doc_id")).distinct()
@@ -928,7 +930,8 @@ object Dedup {
     * representative. This is the flow a training-data pipeline actually
     * applies downstream of any pair generator (minhash / simhash /
     * n-gram Jaccard): transitive closure first — unlike `survivors`'
-    * anti-join, a chain a~b, b~c keeps only a, never both endpoints.
+    * anti-join, the pairs a~c, b~c (a < b < c) keep only a, never both
+    * a and b.
     *
     * Scale shape: CC iterates over the pair set only (never the corpus)
     * and the cluster-size aggregate stays on CC's output. The final

@@ -1,9 +1,11 @@
 package graft.graph
 
 import graft.core.SizeGate
-import graft.core.SizeGate.{AnyIds, idLess, idTypeSupported}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.SizeGate.{AnyIds, idLess}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Graph analytics over KG edge tables (beyond-reference tier).
   *
@@ -58,7 +60,8 @@ object Analytics {
   def bfsDistances(edges: DataFrame, sources: DataFrame,
       maxHops: Int, localCutoff: Int = SmallGraphCutoff): DataFrame = {
     require(maxHops >= 0 && maxHops <= 32, s"maxHops out of range: $maxHops")
-    localRankProbe(edges, localCutoff).foreach { case (ix, ea, eb) =>
+    val g = edges.select(col("src"), col("dst"))
+    SizeGate.localGraph(g, localCutoff).foreach { case (ix, ea, eb) =>
       SizeGate.collectIfSmall(sources.select(col("node")).distinct(),
           localCutoff).foreach { seedRows =>
         // min-hop distances are graph invariants — frontier order cannot
@@ -88,20 +91,9 @@ object Analytics {
           queue = next
           hop += 1L
         }
-        import org.apache.spark.sql.types._
-        val idType = edges.schema("src").dataType
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        var i = 0
-        while (i < ix.n) {
-          if (dist(i) >= 0L)
-            rows.add(org.apache.spark.sql.Row(ix.ids(i), dist(i)))
-          i += 1
-        }
-        extraSeeds.foreach(s =>
-          rows.add(org.apache.spark.sql.Row(s, 0L)))
-        return edges.sparkSession.createDataFrame(rows,
-          StructType(Seq(StructField("node", idType),
-            StructField("dist", LongType))))
+        return localFrame(g, (0 until ix.n).collect {
+          case i if dist(i) >= 0L => Row(ix.ids(i), dist(i))
+        } ++ extraSeeds.map(Row(_, 0L)), Seq("node"), "dist")
       }
     }
     // both directions in one explode pass (a self-union would re-run the
@@ -150,73 +142,58 @@ object Analytics {
     */
   def triangleCounts(edges: DataFrame,
       localCutoff: Int = SmallGraphCutoff): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    smallCanon(canonicalizeRaw(edges), localCutoff) match {
-      case Some(es) =>
-        localTriangles(es).filter(_._2 > 0L)
-          .toDF("node", "n_triangles")
+    val canonRaw = canonicalizeRaw(edges)
+    SizeGate.localGraph(canonRaw, localCutoff) match {
+      case Some((ix, ea, eb)) =>
+        val cnt = localTriangles(ix, ea, eb, undirectedDeg(ix.n, ea, eb))
+        localFrame(canonRaw, (0 until ix.n).collect {
+          case i if cnt(i) > 0L => Row(ix.ids(i), cnt(i))
+        }, Seq("node"), "n_triangles")
       case None =>
-        val canon = canonicalizeRaw(edges).localCheckpoint(true)
+        val canon = canonRaw.localCheckpoint(true)
         triangleCountsFromCanon(canon, degOf(canon).localCheckpoint(true))
     }
   }
 
-  /** Size-adaptive driver fast path shared by the triangle / clustering /
-    * k-core / link-prediction kernels, gated by [[SizeGate.collectIfSmall]]:
-    * when the canonical edge list fits the driver, the iterative/multi-join
-    * distributed kernels collapse to one in-memory pass with zero
-    * additional jobs. Results are IDENTICAL by construction: per-node
-    * triangle membership counts, the k-core and its internal degrees are
-    * graph INVARIANTS (independent of enumeration order), and the local
-    * kernels reproduce the same integer arithmetic (floor division, long
-    * credit sums). Long node ids only; other id types and larger graphs
-    * take the distributed path unchanged. Cutoff sizing: 2 M canonical
-    * edges ≈ 32 MB of probe rows — driver-sized (under default
-    * maxResultSize by 30×), and the edge-iterator work below it is bounded
-    * by Σ min-out-deg ≤ |E|·√|E| single-threaded ops, seconds at the
-    * cutoff — the same order as the distributed kernel's latency floor on
-    * a graph that small.
+  /** Row cutoff of the driver fast paths of every graph kernel here
+    * (BFS, triangles, clustering, k-core, link prediction, label
+    * propagation, PageRank, PPR). Each takes its edges from
+    * [[SizeGate.localGraph]]: when the edge list (directed with
+    * multiplicity, or canonical undirected) has long or string ids and
+    * fits under the cutoff, the iterative/multi-join distributed kernel
+    * collapses to one in-memory pass with no further job. Results are
+    * IDENTICAL by construction: triangle counts, the k-core and its
+    * internal degrees, BFS distances and ranks are graph invariants or
+    * order-independent long sums, the local kernels reproduce the same
+    * integer arithmetic (floor division, long credit sums), and every
+    * id comparison uses Spark's own order ([[SizeGate.idLess]]). Other
+    * id types and larger graphs take the distributed path unchanged.
+    * Cutoff sizing: 2 M edges ≈ 32 MB of probe rows — driver-sized
+    * (under default maxResultSize by 30×), and the edge-iterator work
+    * below it is bounded by Σ min-out-deg ≤ |E|·√|E| single-threaded
+    * ops, seconds at the cutoff — the same order as the distributed
+    * kernel's latency floor on a graph that small.
     */
   private[graph] val SmallGraphCutoff = 2000000
 
-  private def smallCanon(canonRaw: DataFrame,
-      cutoff: Int): Option[Array[(Long, Long)]] =
-    if (canonRaw.schema("a").dataType != org.apache.spark.sql.types.LongType)
-      None
-    else SizeGate.collectIfSmall(canonRaw, cutoff)
-      .map(_.map(r => (r.getLong(0), r.getLong(1))))
-
-  /** Dense-index view of a canonical edge array: node ids remapped to
-    * [0, n) ints, edges as parallel int arrays, degrees as an int array —
-    * the local kernels below run on primitive arrays (no per-op boxing;
-    * the HashMap is touched once per endpoint during indexing only).
+  /** A local kernel's result rows as a DataFrame: the `ids` columns
+    * carry the id type of `g` (the edge frame the kernel's
+    * [[SizeGate.localGraph]] indexed), then the `longs` columns.
     */
-  private final class DenseGraph(es: Array[(Long, Long)]) {
-    val index = new java.util.HashMap[Long, Integer]()
-    private val idBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    private def idOf(x: Long): Int = {
-      val got = index.get(x)
-      if (got != null) got.intValue()
-      else { val i = idBuf.length; index.put(x, i); idBuf += x; i }
-    }
-    val m: Int = es.length
-    val ea = new Array[Int](m)
-    val eb = new Array[Int](m)
-    locally {
-      var e = 0
-      while (e < m) {
-        ea(e) = idOf(es(e)._1); eb(e) = idOf(es(e)._2); e += 1
-      }
-    }
-    val ids: Array[Long] = idBuf.toArray
-    val n: Int = ids.length
-    val deg: Array[Int] = {
-      val d = new Array[Int](n)
-      var e = 0
-      while (e < m) { d(ea(e)) += 1; d(eb(e)) += 1; e += 1 }
-      d
-    }
+  private[graph] def localFrame(g: DataFrame, rows: Seq[Row],
+      ids: Seq[String], longs: String*): DataFrame = {
+    val idType = g.schema(0).dataType
+    g.sparkSession.createDataFrame(rows.asJava, StructType(
+      ids.map(StructField(_, idType)) ++ longs.map(StructField(_, LongType))))
+  }
+
+  /** Undirected degree per dense node: each edge counts at both ends. */
+  private def undirectedDeg(n: Int, ea: Array[Int],
+      eb: Array[Int]): Array[Int] = {
+    val deg = new Array[Int](n)
+    var e = 0
+    while (e < ea.length) { deg(ea(e)) += 1; deg(eb(e)) += 1; e += 1 }
+    deg
   }
 
   /** Undirected CSR adjacency over dense ids: (start, nbr), with node u's
@@ -224,15 +201,13 @@ object Analytics {
     */
   private def undirectedCsr(n: Int, ea: Array[Int],
       eb: Array[Int]): (Array[Int], Array[Int]) = {
-    val deg = new Array[Int](n)
-    var e = 0
-    while (e < ea.length) { deg(ea(e)) += 1; deg(eb(e)) += 1; e += 1 }
+    val deg = undirectedDeg(n, ea, eb)
     val start = new Array[Int](n + 1)
     var i = 0
     while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
     val nbr = new Array[Int](2 * ea.length)
     val fill = java.util.Arrays.copyOf(start, n)
-    e = 0
+    var e = 0
     while (e < ea.length) {
       nbr(fill(ea(e))) = eb(e); fill(ea(e)) += 1
       nbr(fill(eb(e))) = ea(e); fill(eb(e)) += 1
@@ -300,19 +275,20 @@ object Analytics {
     }
   }
 
-  /** Edge-iterator triangle credit counts over a canonical edge array:
-    * orient low→high by (deg, id), intersect sorted out-neighbor arrays
-    * per oriented edge, credit all three corners — the same enumeration
-    * contract as [[triangleCountsFromCanon]] (each triangle found at its
-    * unique out-degree-2 corner). CSR adjacency over dense ints.
+  /** Edge-iterator triangle credit counts per dense node over a
+    * canonical edge set: orient low→high by (deg, id), intersect sorted
+    * out-neighbor arrays per oriented edge, credit all three corners —
+    * the same enumeration contract as [[triangleCountsFromCanon]] (each
+    * triangle found at its unique out-degree-2 corner). CSR adjacency
+    * over dense ints.
     */
-  private def localTriangles(es: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val g = new DenseGraph(es)
-    import g._
+  private def localTriangles(ix: AnyIds, ea: Array[Int], eb: Array[Int],
+      deg: Array[Int]): Array[Long] = {
+    val n = ix.n; val m = ea.length
     // orientation: lower (deg, ORIGINAL id) endpoint keeps the edge
     def lowFirst(e: Int): Boolean = {
       val da = deg(ea(e)); val db = deg(eb(e))
-      da < db || (da == db && ids(ea(e)) < ids(eb(e)))
+      da < db || (da == db && idLess(ix.ids(ea(e)), ix.ids(eb(e))))
     }
     // CSR out-adjacency of the oriented graph
     val outDeg = new Array[Int](n)
@@ -355,7 +331,7 @@ object Analytics {
       }
       u += 1
     }
-    (0 until n).iterator.map(i => (ids(i), cnt(i))).toSeq
+    cnt
   }
 
   /** Canonical undirected simple-graph form: (a < b), deduplicated,
@@ -462,21 +438,17 @@ object Analytics {
     */
   def clusteringCoefficient(edges: DataFrame,
       localCutoff: Int = SmallGraphCutoff): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    smallCanon(canonicalizeRaw(edges), localCutoff) match {
-      case Some(es) =>
-        val deg = scala.collection.mutable.HashMap.empty[Long, Long]
-        es.foreach { case (a, b) =>
-          deg.update(a, deg.getOrElse(a, 0L) + 1L)
-          deg.update(b, deg.getOrElse(b, 0L) + 1L)
-        }
-        val tri = localTriangles(es).toMap
-        deg.toSeq.filter(_._2 >= 2L).map { case (n, d) =>
-          val t = tri.getOrElse(n, 0L)
-          // same integer permille floor as the SQL `div` (operands >= 0)
-          (n, d, t, (2000L * t) / (d * (d - 1L)))
-        }.toDF("node", "deg", "n_triangles", "cc_pm")
+    val canonRaw = canonicalizeRaw(edges)
+    SizeGate.localGraph(canonRaw, localCutoff) match {
+      case Some((ix, ea, eb)) =>
+        val deg = undirectedDeg(ix.n, ea, eb)
+        val tri = localTriangles(ix, ea, eb, deg)
+        localFrame(canonRaw, (0 until ix.n).collect {
+          case i if deg(i) >= 2 =>
+            val d = deg(i).toLong
+            // same integer permille floor as the SQL `div` (operands >= 0)
+            Row(ix.ids(i), d, tri(i), (2000L * tri(i)) / (d * (d - 1L)))
+        }, Seq("node"), "deg", "n_triangles", "cc_pm")
       case None =>
         // ONE canonicalization + ONE degree aggregation shared with the
         // triangle kernel
@@ -523,17 +495,14 @@ object Analytics {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds out of range: $maxRounds")
-    smallCanon(canonicalizeRaw(edges), localCutoff).foreach { es0 =>
+    val canonRaw = canonicalizeRaw(edges)
+    SizeGate.localGraph(canonRaw, localCutoff).foreach { case (ix, ea, eb) =>
       // driver fast path: SYNCHRONOUS peel rounds — the same round
       // structure as the distributed loop below, so the fail-loud
       // maxRounds guard fires on exactly the same inputs; the converged
       // core and its internal degrees are graph invariants either way
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val g = new DenseGraph(es0)
-      val deg = g.deg.clone()
-      val ea = g.ea; val eb = g.eb
-      var m = g.m // live-edge prefix length after each compaction
+      val deg = undirectedDeg(ix.n, ea, eb)
+      var m = ea.length // live-edge prefix length after each compaction
       var round = 0
       var anyUnder = deg.exists(d => d > 0 && d < k)
       while (anyUnder) {
@@ -563,9 +532,9 @@ object Analytics {
           i += 1
         }
       }
-      return (0 until g.n).iterator.collect {
-        case i if deg(i) > 0 => (g.ids(i), deg(i).toLong)
-      }.toSeq.toDF("node", "core_deg")
+      return localFrame(canonRaw, (0 until ix.n).collect {
+        case i if deg(i) > 0 => Row(ix.ids(i), deg(i).toLong)
+      }, Seq("node"), "core_deg")
     }
     // per-round degree table: NODE-sized (checkpointed once per round so
     // the two semi-joins below never re-run the aggregation) — survivors
@@ -653,26 +622,26 @@ object Analytics {
       minJaccardPm: Long = 0L, maxPivotDeg: Int = 0,
       localCutoff: Int = SmallGraphCutoff): DataFrame = {
     require(minCommon >= 1L, s"need minCommon >= 1, got $minCommon")
-    smallCanon(canonicalizeRaw(edges), localCutoff).foreach { es =>
-      val g = new DenseGraph(es)
+    val canonRaw = canonicalizeRaw(edges)
+    SizeGate.localGraph(canonRaw, localCutoff).foreach { case (ix, ea, eb) =>
+      val deg = undirectedDeg(ix.n, ea, eb)
       // wedge volume is Σ C(deg, 2), NOT bounded by the edge cutoff (one
       // hub explodes it) — size it first and keep the driver pass only
       // when the enumeration is trivially small; the distributed kernel
       // (and its maxPivotDeg dial) handles everything else
-      val wedgeVol = g.deg.foldLeft(0L) { (s, d) =>
+      val wedgeVol = deg.foldLeft(0L) { (s, d) =>
         val dd = if (maxPivotDeg > 0 && d > maxPivotDeg) 0L else d.toLong
         s + dd * (dd - 1L) / 2L
       }
       if (wedgeVol <= 200000000L) {
-        val spark = edges.sparkSession
-        import spark.implicits._
-        // CSR adjacency sorted by ORIGINAL id (pair keys compare long ids)
-        val (start, nbr) = undirectedCsr(g.n, g.ea, g.eb)
+        // CSR adjacency with each segment sorted by ORIGINAL id, so a
+        // wedge's pair key is (a, b) with a < b in Spark's id order
+        val (start, nbr) = undirectedCsr(ix.n, ea, eb)
+        val idOrder = Ordering.fromLessThan[Int]((x, y) =>
+          idLess(ix.ids(x), ix.ids(y)))
         var i = 0
-        while (i < g.n) {
-          // sort each segment by original node id (Long order)
-          val seg = nbr.slice(start(i), start(i + 1))
-            .sortBy(j => g.ids(j))
+        while (i < ix.n) {
+          val seg = nbr.slice(start(i), start(i + 1)).sorted(idOrder)
           System.arraycopy(seg, 0, nbr, start(i), seg.length)
           i += 1
         }
@@ -682,10 +651,10 @@ object Analytics {
         // fast path). Key = (denseA << 32) | denseB with a < b by original
         // id; key 0 is impossible (a pair never has both dense ids 0), so
         // 0 is the empty sentinel.
-        val acc = new LongPairAgg(math.max(1024, g.m))
+        val acc = new LongPairAgg(math.max(1024, ea.length))
         var z = 0
-        while (z < g.n) {
-          val d = g.deg(z)
+        while (z < ix.n) {
+          val d = deg(z)
           if (maxPivotDeg <= 0 || d <= maxPivotDeg) {
             val rc = 1000L / d // deg >= 1 for every indexed node
             var p = start(z)
@@ -702,21 +671,21 @@ object Analytics {
         }
         // mark existing edges so prediction keeps only non-adjacent pairs
         var e = 0
-        while (e < g.m) {
-          // canonical pairs already have ids(ea) < ids(eb)
-          acc.markEdge((g.ea(e).toLong << 32) | g.eb(e).toLong); e += 1
+        while (e < ea.length) {
+          // canonical pairs already have ids(ea) < ids(eb): least/greatest
+          // order ids exactly as idLess does
+          acc.markEdge((ea(e).toLong << 32) | eb(e).toLong); e += 1
         }
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Long, Long, Long)]
+        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
         acc.foreachPair { (key, cn, ra) =>
           val ia = (key >> 32).toInt; val ib = (key & 0xffffffffL).toInt
-          val uni = g.deg(ia).toLong + g.deg(ib).toLong - cn
+          val uni = deg(ia).toLong + deg(ib).toLong - cn
           val jac = cn * 1000L / uni
           if (cn >= minCommon && jac >= minJaccardPm)
-            out += ((g.ids(ia), g.ids(ib), cn, uni, jac, ra))
+            out += Row(ix.ids(ia), ix.ids(ib), cn, uni, jac, ra)
         }
-        return out.toSeq
-          .toDF("a", "b", "cn", "uni", "jaccard_pm", "ra_pm")
+        return localFrame(canonRaw, out.toSeq, Seq("a", "b"),
+          "cn", "uni", "jaccard_pm", "ra_pm")
       }
     }
     val canon = canonicalize(edges)
@@ -790,16 +759,11 @@ object Analytics {
       localCutoff: Int = SmallGraphCutoff): DataFrame = {
     require(rounds >= 1 && rounds <= 32, s"rounds out of range: $rounds")
     val canon = canonicalizeRaw(edges)
-    val small =
-      if (idTypeSupported(edges.schema("src").dataType))
-        SizeGate.collectIfSmall(canon, localCutoff)
-      else None
-    small.foreach { probe =>
+    SizeGate.localGraph(canon, localCutoff).foreach { case (ix, ea, eb) =>
       // synchronous rounds over the canonical simple graph; the pick
       // per node is (max neighbor-label count, min label) — the min
       // label under Spark's own ordering (numeric / UTF-8 binary),
       // deterministic, so rounds replay bit-identically
-      val (ix, ea, eb) = AnyIds.ofEdges(probe)
       val n = ix.n
       val (start, nbr) = undirectedCsr(n, ea, eb)
       var labels = Array.tabulate(n)(identity) // own id
@@ -832,17 +796,9 @@ object Analytics {
         }
         labels = next
       }
-      import org.apache.spark.sql.types._
-      val idType = edges.schema("src").dataType
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-      var i = 0
-      while (i < n) {
-        rows.add(org.apache.spark.sql.Row(ix.ids(i), ix.ids(labels(i))))
-        i += 1
-      }
-      return edges.sparkSession.createDataFrame(rows,
-        StructType(Seq(StructField("node", idType),
-          StructField("label", idType))))
+      return localFrame(canon,
+        (0 until n).map(i => Row(ix.ids(i), ix.ids(labels(i)))),
+        Seq("node", "label"))
     }
     // both directions in ONE pass via explode — a self-union would
     // re-execute the distinct once per branch (no cross-branch CSE)
@@ -868,36 +824,6 @@ object Analytics {
     labels
   }
 
-  /** Fixed-point integer PageRank: deterministic across engines.
-    *
-    * Classic PageRank (Brin & Page, 1998) over doubles is NOT
-    * reproducible across engines or even across partitionings — float
-    * summation order differs. This variant runs the same recurrence in
-    * scaled integer arithmetic (ranks are multiples of 1/`scale`):
-    *
-    *   rank'(v) = floor(0.15 * scale) + floor(0.85 * Σ_{u→v} floor(rank(u) / outdeg(u)))
-    *
-    * with damping fixed at 85/100 and NO dangling-mass redistribution
-    * (sinks absorb; documented semantics, matching the oracle SQL).
-    * All quantities are non-negative longs, every division is Spark's
-    * exact integer `div` (NOT `/`, which is double division whose
-    * rounding can cross an integer boundary the oracle's `//` floors
-    * under), and integer addition is order-independent — so a DuckDB
-    * unrolled self-join reproduces the result bit-for-bit. Truncation
-    * error is bounded by iters × maxDegree / scale, negligible at the
-    * default scale=1e9 (which also leaves in_mass × 85 ~8 decimal
-    * orders of long headroom for in-degrees up to ~1e8).
-    *
-    * Each iteration is one equi-join (edges ⋈ ranks on src) + one
-    * partial-agg shuffle on dst. The rank lineage is a pure CHAIN (each
-    * iteration consumes the previous exactly once), so the whole
-    * recurrence compiles into ONE Spark job — no per-round checkpoint
-    * materialization, no no-CSE blowup. Only the multi-consumer inputs
-    * (the pre-joined edge×out-degree table and the node list, each read
-    * every iteration) are checkpointed once up front.
-    *
-    * @return (node, rank) with rank an integer multiple of 1/scale.
-    */
   /** One round of neighborhood feature aggregation — GNN-style message
     * passing over an integer node feature: for every node, the count,
     * sum, min and max of the feature over its UNDIRECTED neighbors
@@ -938,6 +864,41 @@ object Analytics {
       .select("node", "feature", "n_nbrs", "nbr_sum", "nbr_min", "nbr_max")
   }
 
+  /** Fixed-point integer PageRank: deterministic across engines.
+    *
+    * Classic PageRank (Brin & Page, 1998) over doubles is NOT
+    * reproducible across engines or even across partitionings — float
+    * summation order differs. This variant runs the same recurrence in
+    * scaled integer arithmetic (ranks are multiples of 1/`scale`):
+    *
+    *   rank'(v) = floor(0.15 * scale) + floor(0.85 * Σ_{u→v} floor(rank(u) / outdeg(u)))
+    *
+    * with damping fixed at 85/100 and NO dangling-mass redistribution
+    * (sinks absorb; documented semantics, matching the oracle SQL).
+    * All quantities are non-negative longs, every division is Spark's
+    * exact integer `div` (NOT `/`, which is double division whose
+    * rounding can cross an integer boundary the oracle's `//` floors
+    * under), and integer addition is order-independent — so a DuckDB
+    * unrolled self-join reproduces the result bit-for-bit. Truncation
+    * error is bounded by iters × maxDegree / scale, negligible at the
+    * default scale=1e9 (which also leaves in_mass × 85 ~8 decimal
+    * orders of long headroom for in-degrees up to ~1e8).
+    *
+    * Each iteration is one equi-join (edges ⋈ ranks on src) + one
+    * partial-agg shuffle on dst. The rank lineage is a pure CHAIN (each
+    * iteration consumes the previous exactly once), so the whole
+    * recurrence compiles into ONE Spark job — no per-round checkpoint
+    * materialization, no no-CSE blowup. Only the multi-consumer inputs
+    * (the pre-joined edge×out-degree table and the node list, each read
+    * every iteration) are checkpointed once up front.
+    *
+    * @return (node, rank) with rank an integer multiple of 1/scale.
+    */
+  def pageRankFixedPoint(edges: DataFrame, iters: Int = 10,
+      scale: Long = 1000000000L,
+      localCutoff: Int = SmallGraphCutoff): DataFrame =
+    fixedPointRank(edges, None, iters, scale, localCutoff)
+
   /** Personalized PageRank in the same integer fixed-point arithmetic as
     * [[pageRankFixedPoint]]: teleport mass lands ONLY on the seed set,
     * so ranks measure importance *relative to the seeds* — the standard
@@ -964,15 +925,78 @@ object Analytics {
     * @param seeds (node) — rows whose node ids get teleport mass; ids
     *              absent from the edge universe are ignored.
     */
-  /** Probe for the rank-family fast paths: the DIRECTED edge list with
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+      iters: Int = 10, scale: Long = 1000000000L,
+      localCutoff: Int = SmallGraphCutoff): DataFrame =
+    fixedPointRank(edges, Some(seeds), iters, scale, localCutoff)
+
+  /** The one fixed-point rank loop behind [[pageRankFixedPoint]]
+    * (`seeds = None`: every node seeded) and [[personalizedPageRank]].
+    * The local path runs [[localRank]] on the directed edge list with
     * multiplicity (parallel edges contribute per occurrence, exactly as
-    * the distributed join does). Returns (indexer, srcIdx, dstIdx).
+    * the distributed join does); without seeds it skips the seed probe,
+    * and the distributed path skips the seed join.
     */
-  private def localRankProbe(edges: DataFrame,
-      cutoff: Int): Option[(AnyIds, Array[Int], Array[Int])] =
-    if (!idTypeSupported(edges.schema("src").dataType)) None
-    else SizeGate.collectIfSmall(edges.select(col("src"), col("dst")), cutoff)
-      .map(AnyIds.ofEdges)
+  private def fixedPointRank(edges: DataFrame, seeds: Option[DataFrame],
+      iters: Int, scale: Long, localCutoff: Int): DataFrame = {
+    require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
+    val g = edges.select(col("src"), col("dst"))
+    SizeGate.localGraph(g, localCutoff).foreach { case (ix, ea, eb) =>
+      // seed rows outside the edge-derived universe are ignored, exactly
+      // like the distributed left join onto the node frame
+      val seedMask: Option[Array[Boolean]] = seeds match {
+        case None => Some(null) // every node seeded, nothing to probe
+        case Some(sd) =>
+          SizeGate.collectIfSmall(sd.select(col("node")).distinct(),
+              localCutoff).map { seedRows =>
+            val mask = new Array[Boolean](ix.n)
+            seedRows.foreach { r =>
+              val got = ix.index.get(r.get(0))
+              if (got != null) mask(got.intValue()) = true
+            }
+            mask
+          }
+      }
+      seedMask.foreach { mask =>
+        val ranks = localRank(ix.n, ea, eb, iters, scale, mask)
+        return localFrame(g, (0 until ix.n).map(i => Row(ix.ids(i), ranks(i))),
+          Seq("node"), "rank")
+      }
+    }
+    val nodes = edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node")))
+      .distinct()
+    // without seeds the flag is a literal added after the checkpoint, so
+    // Catalyst folds the per-round `when` away
+    val nodeSeed = seeds match {
+      case None => nodes.localCheckpoint(true).withColumn("is_seed", lit(true))
+      case Some(sd) => nodes
+        .join(sd.select(col("node")).distinct()
+          .withColumn("__is_seed", lit(true)), Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("__is_seed"), lit(false)).as("is_seed"))
+        .localCheckpoint(true)
+    }
+    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
+    // (src, dst, out_deg), consumed once per iteration → checkpoint once
+    val edgesWithDeg = edges.join(outDeg, Seq("src"))
+      .localCheckpoint(true)
+    val base = scale * 15L / 100L
+    var ranks = nodeSeed.select(col("node"),
+      when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
+    for (_ <- 1 to iters) {
+      val contrib = edgesWithDeg
+        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+        .select(col("dst").as("node"),
+          expr("rank div out_deg").as("c"))
+        .groupBy("node").agg(sum(col("c")).as("in_mass"))
+      ranks = nodeSeed.join(contrib, Seq("node"), "left")
+        .select(col("node"),
+          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
+            expr("(coalesce(in_mass, 0L) * 85) div 100")).as("rank"))
+    }
+    ranks
+  }
 
   /** The exact integer PageRank recurrence on dense arrays. With
     * `seedMask == null` every node is seeded (global fixed-point PR);
@@ -1008,100 +1032,5 @@ object Analytics {
       rank = next
     }
     rank
-  }
-
-  /** (id, long) result frame with the input's id type. */
-  private def localIdValueDf(spark: SparkSession, ix: AnyIds,
-      vals: Array[Long], idType: org.apache.spark.sql.types.DataType,
-      idName: String, valName: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](ix.n)
-    var i = 0
-    while (i < ix.n) {
-      rows.add(org.apache.spark.sql.Row(ix.ids(i), vals(i))); i += 1
-    }
-    spark.createDataFrame(rows,
-      StructType(Seq(StructField(idName, idType), StructField(valName, LongType))))
-  }
-
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int = 10, scale: Long = 1000000000L,
-      localCutoff: Int = SmallGraphCutoff): DataFrame = {
-    require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
-    localRankProbe(edges, localCutoff).foreach { case (ix, ea, eb) =>
-      // seed rows outside the edge-derived universe are ignored, exactly
-      // like the distributed left join onto the node frame
-      SizeGate.collectIfSmall(seeds.select(col("node")).distinct(),
-          localCutoff).foreach { seedRows =>
-        val mask = new Array[Boolean](ix.n)
-        seedRows.foreach { r =>
-          val got = ix.index.get(r.get(0))
-          if (got != null) mask(got.intValue()) = true
-        }
-        val ranks = localRank(ix.n, ea, eb, iters, scale, mask)
-        return localIdValueDf(edges.sparkSession, ix, ranks,
-          edges.schema("src").dataType, "node", "rank")
-      }
-    }
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-    val nodeSeed = nodes
-      .join(seeds.select(col("node")).distinct()
-        .withColumn("__is_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint(true)
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
-    val edgesWithDeg = edges.join(outDeg, Seq("src"))
-      .localCheckpoint(true)
-    val base = scale * 15L / 100L
-    var ranks = nodeSeed.select(col("node"), col("is_seed"),
-      when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = edgesWithDeg
-        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
-        .select(col("dst").as("node"),
-          expr("rank div out_deg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in_mass"))
-      ranks = nodeSeed.join(contrib, Seq("node"), "left")
-        .select(col("node"), col("is_seed"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr("(coalesce(in_mass, 0L) * 85) div 100")).as("rank"))
-    }
-    ranks.select(col("node"), col("rank"))
-  }
-
-  def pageRankFixedPoint(edges: DataFrame, iters: Int = 10,
-      scale: Long = 1000000000L,
-      localCutoff: Int = SmallGraphCutoff): DataFrame = {
-    require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
-    localRankProbe(edges, localCutoff).foreach { case (ix, ea, eb) =>
-      val ranks = localRank(ix.n, ea, eb, iters, scale,
-        seedMask = null) // all nodes seeded with `scale` (global PR)
-      val spark = edges.sparkSession
-      return localIdValueDf(spark, ix, ranks,
-        edges.schema("src").dataType, "node", "rank")
-    }
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
-    // (src, dst, out_deg), consumed once per iteration → checkpoint once
-    val edgesWithDeg = edges.join(outDeg, Seq("src"))
-      .localCheckpoint(true)
-    val base = scale * 15L / 100L
-    var ranks = nodes.select(col("node"), lit(scale).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = edgesWithDeg
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          expr("rank div out_deg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in_mass"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          expr(s"$base + ((coalesce(in_mass, 0L) * 85) div 100)").as("rank"))
-    }
-    ranks
   }
 }

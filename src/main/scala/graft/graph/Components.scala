@@ -3,7 +3,6 @@ package graft.graph
 import graft.core._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Mapping graph construction and connected-component canonicalization.
   *
@@ -53,9 +52,9 @@ object Components {
     * The input is reduced once to its distinct undirected edges
     * `(least(src, dst), greatest(src, dst))`, self-loops kept. At most
     * `localCutoff` of them (long or string ids) take a driver-side
-    * union-find through [[SizeGate]]: near-dup pair sets are a small
-    * fraction of the corpus, and Spark rounds at that size are pure
-    * scheduler latency. Larger sets run alternating large-star/small-star
+    * union-find through [[SizeGate.localGraph]]: near-dup pair sets are
+    * a small fraction of the corpus, and Spark rounds at that size are
+    * pure scheduler latency. Larger sets run alternating large-star/small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14), which converges in O(log² n) rounds whatever the component
     * diameter. Each round is partial-agg groupBys plus equi-joins,
@@ -72,13 +71,7 @@ object Components {
     val und = edges.select(least(col("src"), col("dst")).as("src"),
       greatest(col("src"), col("dst")).as("dst")).distinct()
 
-    val idType = und.schema("src").dataType
-    val small =
-      if (SizeGate.idTypeSupported(idType))
-        SizeGate.collectIfSmall(und, localCutoff)
-      else None
-    small.foreach { rows =>
-      val (ix, ea, eb) = SizeGate.AnyIds.ofEdges(rows)
+    SizeGate.localGraph(und, localCutoff).foreach { case (ix, ea, eb) =>
       val parent = Array.tabulate(ix.n)(identity)
       def find(x0: Int): Int = {
         var x = x0
@@ -97,14 +90,9 @@ object Components {
         }
         e += 1
       }
-      val out = new java.util.ArrayList[Row]()
-      var i = 0
-      while (i < ix.n) {
-        out.add(Row(ix.ids(i), ix.ids(find(i))))
-        i += 1
-      }
-      return edges.sparkSession.createDataFrame(out, StructType(Seq(
-        StructField("node", idType), StructField("comp", idType))))
+      return Analytics.localFrame(und,
+        (0 until ix.n).map(i => Row(ix.ids(i), ix.ids(find(i)))),
+        Seq("node", "comp"))
     }
 
     // distributed path. Every round materializes its edge set once; the

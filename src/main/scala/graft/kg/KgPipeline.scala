@@ -183,8 +183,11 @@ object KgPipeline {
             s""""n_triples":${r.getLong(1)},"n_components":${r.getLong(2)},""" +
             s""""seed":${cfg.seed}}""")
         metrics.foreach(appendLedger(cfg.outDir, _))
+        // groups are pmod(bucket, resumeGroups): the first
+        // buckets % resumeGroups groups hold one bucket more
+        val nBuckets = (0 until cfg.buckets).count(_ % cfg.resumeGroups == g)
         appendLedger(cfg.outDir,
-          s"""{"group":$g,"status":"complete","n_buckets":${cfg.buckets / cfg.resumeGroups}}""")
+          s"""{"group":$g,"status":"complete","n_buckets":$nBuckets}""")
         run += 1
       }
     }

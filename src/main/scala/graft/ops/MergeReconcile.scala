@@ -294,7 +294,9 @@ object MergeReconcile {
   /** Entity-pair diff of two mapping sets (reference `compare_dataframes`):
     * unordered (subject, object) entity pairs — entities carry id, label,
     * category and source — labeled UNIQUE_1 / UNIQUE_2 / COMMON_TO_BOTH.
-    * Implemented as distinct-key anti/semi joins, no driver iteration.
+    * One flags table (pair → in set 1, in set 2) carries the whole
+    * decision: materialized once, counted in one aggregate, and attached
+    * to each side by one left join. No driver iteration.
     */
   def diff(df1: DataFrame, df2: DataFrame): MappingSetDiff = {
     // Reference `EntityPair` has a symmetric __hash__ but the default
@@ -303,29 +305,29 @@ object MergeReconcile {
     // ORDERED (subject_id, object_id) pair of ids.
     def pairKey(df: DataFrame) =
       struct(colOr(df, SubjectId).as("s"), colOr(df, ObjectId).as("o"))
-    // each key set feeds three branches (both uniques + common) and each
-    // unique set three more (two annotate joins + its count) — without
-    // boundaries the distincts re-execute ~6× (no-CSE rule)
-    val k1 = SparkUtil.materializeOnce(
-      df1.select(pairKey(df1).as("__pair")).distinct())
-    val k2 = SparkUtil.materializeOnce(
-      df2.select(pairKey(df2).as("__pair")).distinct())
-    val unique1 = SparkUtil.materializeOnce(k1.join(k2, Seq("__pair"), "left_anti"))
-    val unique2 = SparkUtil.materializeOnce(k2.join(k1, Seq("__pair"), "left_anti"))
-    val common = k1.join(k2, Seq("__pair"), "left_semi") // consumed once
+    def tagged(df: DataFrame, in1: Boolean) =
+      df.select(pairKey(df).as("__pair"),
+        lit(in1).as("__in1"), lit(!in1).as("__in2"))
+    // read by the count and by both annotate joins: one materialization
+    val flags = SparkUtil.materializeOnce(
+      tagged(df1, in1 = true).union(tagged(df2, in1 = false))
+        .groupBy("__pair")
+        .agg(max("__in1").as("__in1"), max("__in2").as("__in2")))
+    val both = col("__in1") && col("__in2")
+    val n = flags.agg(
+      count(when(!col("__in2"), 1)), count(when(!col("__in1"), 1)),
+      count(when(both, 1))).first()
 
-    def annotate(df: DataFrame, uniques: DataFrame, uniqueLabel: String) = {
-      val keyed = df.withColumn("__pair", pairKey(df))
-      val u = keyed.join(uniques, Seq("__pair"), "left_semi")
-        .withColumn(Comment, lit(uniqueLabel))
-      val c = keyed.join(uniques, Seq("__pair"), "left_anti")
-        .withColumn(Comment, lit("COMMON_TO_BOTH"))
-      u.unionByName(c).drop("__pair")
-    }
-    val combined = annotate(df1, unique1, "UNIQUE_1")
-      .unionByName(annotate(df2, unique2, "UNIQUE_2"), allowMissingColumns = true)
+    def annotate(df: DataFrame, uniqueLabel: String) =
+      df.withColumn("__pair", pairKey(df))
+        .join(flags, Seq("__pair"), "left")
+        .withColumn(Comment,
+          when(both, lit("COMMON_TO_BOTH")).otherwise(lit(uniqueLabel)))
+        .drop("__pair", "__in1", "__in2")
+    val combined = annotate(df1, "UNIQUE_1")
+      .unionByName(annotate(df2, "UNIQUE_2"), allowMissingColumns = true)
       .dropDuplicates()
-    MappingSetDiff(unique1.count(), unique2.count(), common.count(), combined)
+    MappingSetDiff(n.getLong(0), n.getLong(1), n.getLong(2), combined)
   }
 
   final case class MappingSetDiff(

@@ -47,6 +47,23 @@ class SizeGateSpec extends SparkSpec {
     }
   }
 
+  test("localGraph: long and string ids index under the cutoff; other " +
+      "id types, mixed types and oversize edge lists do not") {
+    import spark.implicits._
+    val longs = Seq((3L, 1L), (1L, 2L), (3L, 1L)).toDF("src", "dst")
+    val (ix, ea, eb) = SizeGate.localGraph(longs, 3).get
+    // one slot per row, parallel edges kept, ids in first-seen order
+    assert(ix.ids.toSeq == Seq(3L, 1L, 2L))
+    assert(ea.toSeq == Seq(0, 1, 0) && eb.toSeq == Seq(1, 2, 1))
+    assert(SizeGate.localGraph(longs, 2).isEmpty)
+    assert(SizeGate.localGraph(longs, 0).isEmpty)
+    val strs = Seq(("a", "b")).toDF("src", "dst")
+    assert(SizeGate.localGraph(strs, 10).map(_._1.ids.toSeq) ==
+      Some(Seq("a", "b")))
+    assert(SizeGate.localGraph(Seq((1, 2)).toDF("src", "dst"), 10).isEmpty)
+    assert(SizeGate.localGraph(Seq((1L, "b")).toDF("src", "dst"), 10).isEmpty)
+  }
+
   test("u8Less is Spark's string order: unsigned UTF-8, not UTF-16") {
     val clef = new String(Character.toChars(0x1D11E))
     val ids = Seq("", "a", "ab", "b", "\u00E9", "\uE000", "\uFFFF", clef,

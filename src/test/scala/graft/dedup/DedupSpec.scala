@@ -503,7 +503,8 @@ class DedupSpec extends SparkSpec {
   test("nearDupDedup: transitive clusters, min-id representative, " +
       "singletons kept, chains collapse to ONE representative") {
     // chain 1~2, 2~3 plus isolated pair 10~11: transitive closure must
-    // put 1,2,3 in ONE cluster (survivors' anti-join would keep 3)
+    // put 1,2,3 in ONE cluster (survivors' anti-join keeps only 1 here
+    // too; it keeps two of a~c, b~c)
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val ids = (1L to 5L) ++ Seq(10L, 11L)
     val docsAll = ids.map(i => (i, s"doc $i")).toDF("doc_id", "text")

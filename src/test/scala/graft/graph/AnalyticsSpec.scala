@@ -1,6 +1,8 @@
 package graft.graph
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Brute-force witnesses for the KG edge-table analytics family.
@@ -248,39 +250,39 @@ class AnalyticsSpec extends SparkSpec {
   test("driver fast path equals the distributed kernels bit-for-bit " +
       "(triangles, clustering coefficient, k-core)") {
     // localCutoff = 0 forces the distributed path on the same input; the
-    // default cutoff takes the driver fast path — outputs must be equal
-    // as maps (graph invariants, so no ordering caveats)
+    // default cutoff takes the driver fast path (a local relation) —
+    // outputs must be equal as row sets (graph invariants, so no
+    // ordering caveats)
+    def check(edf: DataFrame): Unit = {
+      def same(kernel: Int => DataFrame, nonEmpty: Boolean = false): Unit = {
+        val fast = kernel(Analytics.SmallGraphCutoff)
+        assert(fast.queryExecution.logical.isInstanceOf[LocalRelation],
+          "the default cutoff must take the driver fast path")
+        val got = fast.collect().map(_.toSeq).toSet
+        assert(got == kernel(0).collect().map(_.toSeq).toSet)
+        if (nonEmpty) assert(got.nonEmpty)
+      }
+      same(c => Analytics.triangleCounts(edf, localCutoff = c),
+        nonEmpty = true)
+      same(c => Analytics.clusteringCoefficient(edf, localCutoff = c))
+      same(c => Analytics.kCore(edf, k = 5, localCutoff = c))
+      same(c => Analytics.linkPredict(edf, minCommon = 2L, localCutoff = c),
+        nonEmpty = true)
+      // pivot-cap arm agrees across paths too
+      same(c => Analytics.linkPredict(edf, minCommon = 1L, maxPivotDeg = 6,
+        localCutoff = c))
+    }
     val edges = seededEdges(80, 10, seed = 0x5eedL)
-    val edf = (edges ++ edges.map(_.swap)).toDF("src", "dst") // uncanonical
-    val triFast = Analytics.triangleCounts(edf)
-      .as[(Long, Long)].collect().toMap
-    val triDist = Analytics.triangleCounts(edf, localCutoff = 0)
-      .as[(Long, Long)].collect().toMap
-    assert(triFast == triDist)
-    assert(triFast.nonEmpty)
-    val ccFast = Analytics.clusteringCoefficient(edf)
-      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val ccDist = Analytics.clusteringCoefficient(edf, localCutoff = 0)
-      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    assert(ccFast == ccDist)
-    val kcFast = Analytics.kCore(edf, k = 5)
-      .as[(Long, Long)].collect().toMap
-    val kcDist = Analytics.kCore(edf, k = 5, localCutoff = 0)
-      .as[(Long, Long)].collect().toMap
-    assert(kcFast == kcDist)
-    val lpFast = Analytics.linkPredict(edf, minCommon = 2L)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    val lpDist = Analytics.linkPredict(edf, minCommon = 2L, localCutoff = 0)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(lpFast == lpDist)
-    assert(lpFast.nonEmpty)
-    // pivot-cap arm agrees across paths too
-    val lpcFast = Analytics.linkPredict(edf, minCommon = 1L, maxPivotDeg = 6)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    val lpcDist = Analytics.linkPredict(edf, minCommon = 1L, maxPivotDeg = 6,
-        localCutoff = 0)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(lpcFast == lpcDist)
+    val both = edges ++ edges.map(_.swap) // uncanonical
+    check(both.toDF("src", "dst"))
+    // string ids through the same kernels: U+E000- and U+1D11E-prefixed
+    // ids order one way under Spark's UTF-8 order and the other way
+    // under String.compareTo (UTF-16), so a local kernel comparing ids
+    // with compareTo would emit cross-half link-prediction pairs as
+    // (b, a) where the distributed kernel emits (a, b)
+    val clef = new String(Character.toChars(0x1D11E))
+    def sid(x: Long): String = (if (x % 2L == 0L) "\uE000" else clef) + x
+    check(both.map { case (a, b) => (sid(a), sid(b)) }.toDF("src", "dst"))
     // fail-loud guard fires identically on the fast path
     val long = (1L to 12L).sliding(2).map(s => (s.head, s.last)).toSeq
       .toDF("src", "dst")

@@ -65,6 +65,32 @@ class KgPipelineSpec extends SparkSpec {
     assert(r2.groupsRun == 0 && r2.groupsSkipped == 4)
   }
 
+  test("resume ledger: each complete marker counts its group's own " +
+      "buckets when buckets % resumeGroups != 0") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // groups are pmod(bucket, 4) over 10 buckets: groups 0-1 hold 3
+    // buckets, groups 2-3 hold 2
+    val unevenCfg = cfg.copy(
+      outDir = Files.createTempDirectory("kg_uneven").toString,
+      buckets = 10, resumeGroups = 4)
+    val edges = (0 until 200).map(i =>
+        (s"kb:s$i", "skos:exactMatch", s"kb:o${i % 7}", s"kb:c${i % 5}"))
+      .toDF(Schema.SubjectId, Schema.PredicateId, Schema.ObjectId, "component")
+    val r = KgPipeline.materialize(spark, edges, unevenCfg)
+    assert(r.groupsRun == 4)
+    val lines = Files.readAllLines(
+      Paths.get(unevenCfg.outDir, "_ledger.jsonl")).asScala.toSeq
+    val marker = "\\{\"group\":(\\d+),\"status\":\"complete\",\"n_buckets\":(\\d+)\\}".r
+    val got = lines.collect { case marker(g, n) => g.toInt -> n.toInt }.toMap
+    assert(got == Map(0 -> 3, 1 -> 3, 2 -> 2, 3 -> 2))
+    // every bucket is non-empty here, so the lineage rows agree
+    (0 until 4).foreach { g =>
+      assert(lines.count(l => l.startsWith(s"""{"group":$g,"bucket":""")) ==
+        got(g), s"group $g lineage rows")
+    }
+  }
+
   test("linkFuzzyTfidf: rarest-token blocking finds every pair whose " +
       "mention carries the surface's rarest token; verification exact") {
     import graft.text.TextHash
@@ -182,7 +208,7 @@ class KgPipelineSpec extends SparkSpec {
     (0 until cfg.resumeGroups).foreach { g =>
       assert(fin.count(l => grp(l).contains(g) &&
         l.contains("\"status\":\"complete\"")) == 1, s"group $g markers")
-      val nBuckets = cfg.buckets / cfg.resumeGroups
+      val nBuckets = (0 until cfg.buckets).count(_ % cfg.resumeGroups == g)
       assert(fin.count(l => grp(l).contains(g) &&
         l.contains("\"bucket\":")) == nBuckets, s"group $g lineage rows")
     }

@@ -93,6 +93,12 @@ class MergeReconcileSpec extends SparkSpec {
     assert(d.nUnique1 == 15)
     assert(d.nUnique2 == 3)
     assert(d.nCommon == 76)
+    // rows per label of the combined frame: 15 set-1-only pairs span 18
+    // rows, and both sides' rows of the 76 shared pairs collapse to 173
+    val perLabel = d.combined.groupBy("comment").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perLabel == Map("UNIQUE_1" -> 18L, "UNIQUE_2" -> 3L,
+      "COMMON_TO_BOTH" -> 173L))
   }
 
   test("remove_mappings anti-join removes exactly the given keys") {
