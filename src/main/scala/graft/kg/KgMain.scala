@@ -14,17 +14,20 @@ import org.apache.spark.sql.SparkSession
   *   --buckets 4096 --resume-groups 64
   * }}}
   *
+  * Flags (defaults): `--out` (required), `--conv` 1000, `--turns` 8,
+  * `--concepts` 500, `--buckets` 16, `--resume-groups` 4, `--seed` 42.
+  * Fuzzy linking has no blocking choice: it is one lossless prefix-filter
+  * join (`Linker.linkFuzzy`).
+  *
   * Relaunching with the same --out resumes: completed bucket groups are
-  * read from the ledger and skipped (`KgPipeline.materialize`). The
-  * session comes from `getOrCreate(), so master/memory/shuffle settings
-  * belong to spark-submit, not this code; only shuffle partitions get a
-  * default if unset.
+  * read from the ledger and skipped, and the groups left run concurrently
+  * (`KgPipeline.materialize`). The session comes from `getOrCreate()`, so
+  * master/memory/shuffle settings belong to spark-submit, not this code.
   */
 object KgMain {
 
   private val knownFlags = Set(
-    "out", "conv", "turns", "concepts", "buckets", "resume-groups", "seed",
-    "blocking")
+    "out", "conv", "turns", "concepts", "buckets", "resume-groups", "seed")
 
   def parse(args: Array[String]): KgPipeline.Config = {
     // fail fast on malformed invocations: an odd arg list means a flag
@@ -51,8 +54,7 @@ object KgMain {
       nConcepts = m.getOrElse("concepts", "500").toLong,
       buckets = m.getOrElse("buckets", "16").toInt,
       resumeGroups = m.getOrElse("resume-groups", "4").toInt,
-      seed = m.getOrElse("seed", "42").toLong,
-      blocking = m.getOrElse("blocking", "minhash"))
+      seed = m.getOrElse("seed", "42").toLong)
   }
 
   def main(args: Array[String]): Unit = {

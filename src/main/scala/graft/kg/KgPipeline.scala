@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors}
 
 /** End-to-end KG construction over transcript tables (the north rule):
-  * mention detection → exact + MinHash-blocked fuzzy linking → SSSOM
+  * mention detection → exact + lossless prefix-filter fuzzy linking → SSSOM
   * reconcile (window-max dedup) → connected-component canonicalization on
   * exactMatch edges → Iceberg-layout node/edge Parquet tables with
   * per-partition lineage rows, triple-count metrics, a snapshot manifest,
@@ -21,12 +22,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   * carrying the schema, partition list and per-partition counts — the table
   * contract the north rule exercises.
   *
-  * Scale notes: the dictionary side of both joins is broadcast (no shuffle
+  * Scale notes: the dictionary side of both links is broadcast (no shuffle
   * on the mention side); hot head-entity keys are absorbed by map-side
   * partial aggregation + AQE skew-join in the reconcile; the CC loop
   * localCheckpoints per round; buckets are processed in
-  * `resumeGroups` independent jobs so a restart skips completed groups via
-  * the ledger.
+  * `resumeGroups` independent groups, written concurrently, so a restart
+  * skips completed groups via the ledger.
   */
 object KgPipeline {
 
@@ -37,10 +38,7 @@ object KgPipeline {
       nConcepts: Long = 500L,
       buckets: Int = 16,
       resumeGroups: Int = 4,
-      seed: Long = 42L,
-      // candidate-link blocking family: "minhash" (LSH bands) or "tfidf"
-      // (rarest-token blocks) — the north rule names both
-      blocking: String = "minhash")
+      seed: Long = 42L)
 
   final case class Result(
       triples: Long, nodes: Long, edges: Long, components: Long,
@@ -54,22 +52,16 @@ object KgPipeline {
   def extractMappings(spark: SparkSession, cfg: Config): DataFrame = {
     val transcripts = Synthetic.transcripts(spark, cfg.nConv, cfg.turnsPerConv,
       cfg.nConcepts, cfg.seed)
-    // the dictionary feeds two join branches (exact broadcast + fuzzy band
-    // broadcast) — materialize its tiny generation plan once instead of
-    // re-running it per branch
+    // the dictionary feeds two link branches (exact broadcast join + the
+    // fuzzy linker's collected index) — materialize its tiny generation
+    // plan once instead of re-running it per branch
     val dict = Synthetic.dictionary(spark, cfg.nConcepts, cfg.seed)
       .localCheckpoint(true)
     // mentions feed both link branches; recomputing the cheap explode in
-    // each branch beats an extra materialization job (the expensive band
-    // signatures live only in the fuzzy branch)
+    // each branch beats an extra materialization job
     val mentions = Linker.detectMentions(transcripts)
     val exact = Linker.linkExact(mentions, dict)
-    val fuzzy = cfg.blocking match {
-      case "minhash" => Linker.linkFuzzy(mentions, dict)
-      case "tfidf"   => Linker.linkFuzzyTfidf(mentions, dict)
-      case other => throw new IllegalArgumentException(
-        s"unknown blocking family '$other' (minhash | tfidf)")
-    }
+    val fuzzy = Linker.linkFuzzy(mentions, dict)
     Linker.toSssomRows(exact.unionByName(fuzzy))
   }
 
@@ -134,16 +126,22 @@ object KgPipeline {
     }
   }
 
-  private def appendLedger(outDir: String, line: String): Unit = {
-    Files.createDirectories(Paths.get(outDir))
-    Files.write(ledgerPath(outDir), (line + "\n").getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
+  // one lock for every ledger append: groups run on concurrent threads
+  private val ledgerLock = new Object
+
+  private def appendLedger(outDir: String, line: String): Unit =
+    ledgerLock.synchronized {
+      Files.createDirectories(Paths.get(outDir))
+      Files.write(ledgerPath(outDir), (line + "\n").getBytes(StandardCharsets.UTF_8),
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    }
 
   /** Materialize node + edge tables partitioned by subject-hash bucket.
-    * Buckets are grouped into `resumeGroups` jobs; each group is written
-    * atomically (job success → ledger entry), so a relaunch only runs
-    * missing groups.
+    * Buckets are grouped into `resumeGroups` groups; each group is written
+    * atomically (its data, then its lineage, then its complete marker), so
+    * a relaunch only runs missing groups. The groups left to run are
+    * written concurrently, one driver thread each; a failure in any of
+    * them is rethrown once all have finished.
     */
   def materialize(spark: SparkSession, edges: DataFrame, cfg: Config): Result = {
     val bucketed = edges
@@ -152,56 +150,91 @@ object KgPipeline {
       .withColumn("group", pmod(col("bucket"), lit(cfg.resumeGroups)))
       .localCheckpoint(true) // compute extraction once across group jobs
 
-    val done = completedGroups(cfg.outDir)
-    var run = 0; var skipped = 0
-    (0 until cfg.resumeGroups).foreach { g =>
-      if (done.contains(g)) skipped += 1
-      else {
-        val part = bucketed.filter(col("group") === g)
-        part.drop("group")
-          .repartition(col("bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(s"${cfg.outDir}/edges/group=$g")
-        // nodes for this group: subjects in its buckets + their objects
-        val nodes = part.select(col(Schema.SubjectId).as("node"),
-            col("component"), col("bucket"))
-          .union(part.select(col(Schema.ObjectId).as("node"),
-            col("component"), col("bucket")))
-          .groupBy("node", "bucket")
-          .agg(min("component").as("component"), count(lit(1)).as("degree"))
-        nodes.repartition(col("bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(s"${cfg.outDir}/nodes/group=$g")
-        // per-partition lineage + metrics
-        val metrics = part.groupBy("bucket")
-          .agg(count(lit(1)).as("n_triples"),
-            countDistinct(col("component")).as("n_components"))
-          .collect()
-          .map(r => s"""{"group":$g,"bucket":${r.getInt(0)},""" +
-            s""""n_triples":${r.getLong(1)},"n_components":${r.getLong(2)},""" +
-            s""""seed":${cfg.seed}}""")
-        metrics.foreach(appendLedger(cfg.outDir, _))
-        // groups are pmod(bucket, resumeGroups): the first
-        // buckets % resumeGroups groups hold one bucket more
-        val nBuckets = (0 until cfg.buckets).count(_ % cfg.resumeGroups == g)
-        appendLedger(cfg.outDir,
-          s"""{"group":$g,"status":"complete","n_buckets":$nBuckets}""")
-        run += 1
-      }
+    // every count of the lineage and the manifest from ONE aggregate over
+    // (node, is_subject) rows: per bucket its triples (subject rows) and
+    // components, and in the grand-total row the node count too.
+    // countDistinct skips nulls where the old distinct().count() counted
+    // a null id as a node, so a null id is counted explicitly. Returns the
+    // totals (triples, components, nodes) and each group's lineage lines.
+    def summarize(): ((Long, Long, Long), Map[Int, Seq[String]]) = {
+      val node = col("e.node")
+      val rows = bucketed
+        .select(col("bucket"), col("component"), explode(array(
+          struct(col(Schema.SubjectId).as("node"), lit(true).as("is_subject")),
+          struct(col(Schema.ObjectId).as("node"), lit(false).as("is_subject"))))
+          .as("e"))
+        .rollup("bucket")
+        .agg(grouping("bucket").cast("int").as("total"),
+          count(when(col("e.is_subject"), lit(1))).as("n_triples"),
+          countDistinct(col("component")).as("n_components"),
+          (countDistinct(node) +
+            (count(when(node.isNull, lit(1))) > 0).cast("long")).as("n_nodes"))
+        .collect()
+      val (totals, perBucket) = rows.partition(_.getAs[Int]("total") == 1)
+      def total(c: String) = totals.headOption.fold(0L)(_.getAs[Long](c))
+      val lineage = perBucket.toSeq.map { r =>
+        val b = r.getAs[Int]("bucket")
+        (b, s"""{"group":${b % cfg.resumeGroups},"bucket":$b,""" +
+          s""""n_triples":${r.getAs[Long]("n_triples")},""" +
+          s""""n_components":${r.getAs[Long]("n_components")},""" +
+          s""""seed":${cfg.seed}}""")
+      }.sortBy(_._1).groupMap(_._1 % cfg.resumeGroups)(_._2)
+      ((total("n_triples"), total("n_components"), total("n_nodes")), lineage)
+    }
+    val summary =
+      new CompletableFuture[((Long, Long, Long), Map[Int, Seq[String]])]()
+
+    def writeGroup(g: Int): Unit = {
+      val part = bucketed.filter(col("group") === g).drop("group")
+        .repartition(col("bucket"))
+      part.write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(s"${cfg.outDir}/edges/group=$g")
+      // nodes for this group: subjects in its buckets + their objects. The
+      // input is already hash-partitioned by bucket, which the
+      // (node, bucket) aggregate accepts: one bucket per partition, no
+      // second exchange
+      part.select(explode(array(col(Schema.SubjectId), col(Schema.ObjectId)))
+          .as("node"), col("component"), col("bucket"))
+        .groupBy("node", "bucket")
+        .agg(min("component").as("component"), count(lit(1)).as("degree"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(s"${cfg.outDir}/nodes/group=$g")
+      summary.get()._2.getOrElse(g, Nil).foreach(appendLedger(cfg.outDir, _))
+      // groups are pmod(bucket, resumeGroups): the first
+      // buckets % resumeGroups groups hold one bucket more
+      val nBuckets = (0 until cfg.buckets).count(_ % cfg.resumeGroups == g)
+      appendLedger(cfg.outDir,
+        s"""{"group":$g,"status":"complete","n_buckets":$nBuckets}""")
     }
 
-    // snapshot manifest (atomic via temp + move). Two passes over the
-    // checkpointed edge table, not three: triple + component counts fuse
-    // into one aggregate; the node count needs its own explode-distinct
-    // (subjects ∪ objects is a different row domain)
-    val tc = bucketed.agg(count(lit(1)).as("t"),
-      countDistinct(col("component")).as("c")).first()
-    val (nTriples, nComponents) = (tc.getLong(0), tc.getLong(1))
-    val nNodes = bucketed.select(explode(array(
-        col(Schema.SubjectId), col(Schema.ObjectId))).as("n"))
-      .distinct().count()
+    val done = completedGroups(cfg.outDir)
+    val todo = (0 until cfg.resumeGroups).filterNot(done.contains)
+    // threads made here inherit the caller's Spark local properties
+    val pool = Executors.newFixedThreadPool(math.max(1, todo.size))
+    try {
+      val groups = todo.map { g =>
+        val task: Runnable = () => writeGroup(g)
+        pool.submit(task)
+      }
+      // the aggregate runs on this thread while the groups write; a group
+      // waits for it only before its lineage
+      val summaryFailure =
+        try { summary.complete(summarize()); None }
+        catch { case e: Throwable => summary.completeExceptionally(e); Some(e) }
+      val failures = summaryFailure.toSeq ++ groups.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { e =>
+        failures.tail.foreach(e.addSuppressed)
+        throw e
+      }
+    } finally pool.shutdown()
+    val (nTriples, nComponents, nNodes) = summary.get()._1
+
+    // snapshot manifest (atomic via temp + move)
     val manifest =
       s"""{"format":"iceberg-layout-v1","schema":["subject_id","predicate_id","object_id","component","bucket"],
          |"partition_spec":"bucket(${cfg.buckets}, xxhash64(subject_id))",
@@ -213,7 +246,8 @@ object KgPipeline {
     Files.move(tmp, Paths.get(cfg.outDir, "_manifest.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
 
-    Result(nTriples, nNodes, nTriples, nComponents, run, skipped)
+    Result(nTriples, nNodes, nTriples, nComponents, todo.size,
+      cfg.resumeGroups - todo.size)
   }
 
   /** Full pipeline. */

@@ -1,6 +1,7 @@
 package graft.kg
 
 import graft.core.Schema
+import graft.sim.SetSimJoin
 import graft.text.TextHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -18,13 +19,11 @@ import org.apache.spark.sql.functions._
   *     concentrate on one task here; downstream hot-key aggregation is
   *     handled by map-side partial aggregation + AQE skew-join in the
   *     reconcile step (MergeReconcile.filterRedundantRows), not by salting;
-  *  3. fuzzy linking, two blocking families (north rule: "MinHash/TF-IDF
-  *     blocking"): MinHash-style LSH — character-3-gram min hashes per
-  *     band on both sides, equi-join on (band, signature) — and TF-IDF
-  *     rarest-token blocking (`linkFuzzyTfidf`) — each dictionary surface
-  *     registers under its lowest-df token, mentions meet concepts via an
-  *     equi-join on that token. Both verified by exact trigram-Jaccard
-  *     ≥ threshold.
+  *  3. fuzzy linking: every (mention, concept) pair whose character-
+  *     trigram Jaccard against the concept's label is ≥ a threshold,
+  *     found losslessly by the prefix-filter join `graft.sim.SetSimJoin`
+  *     (the north rule's TF-IDF blocking: the prefix order is
+  *     rarest-trigram first) and verified exactly.
   *
   * Output: SSSOM mapping rows (subject = mention CURIE, object = concept,
   * predicate ∈ skos:exactMatch/closeMatch,
@@ -58,14 +57,6 @@ object Linker {
         explode(filter(spanArr, s => length(s) >= 3)).as("mention"))
   }
 
-  /** MinHash band signatures over character trigrams (JIT'd kernel —
-    * see graft.text.TextHash for the rationale).
-    */
-  def bandSignatures(c: Column, bands: Int): Column = {
-    val f = udf((s: String) => TextHash.charBandSignature(s, bands))
-    f(c)
-  }
-
   /** Exact-surface link: mention == label or synonym. */
   def linkExact(mentions: DataFrame, dictionary: DataFrame): DataFrame = {
     val dict = dictionary.select(
@@ -85,100 +76,43 @@ object Linker {
         when(col("isLabel"), lit(0.95)).otherwise(lit(0.85)).as("confidence"))
   }
 
-  /** Fuzzy link via LSH banding + trigram-Jaccard verification. */
-  def linkFuzzy(mentions: DataFrame, dictionary: DataFrame, bands: Int = 4,
-      jaccardMin: Double = 0.55): DataFrame = {
-    // fuzzy linking targets full multi-word surfaces; single short tokens
-    // only flood the LSH buckets with low-similarity candidates
-    val fuzzyMentions = mentions
-      .filter(col("mention").contains(" ") && length(col("mention")) >= 7)
-    val dictSurf = dictionary.select(col("concept_id"),
-      normalize(col("label")).as("surface"))
-    // compute the full signature array ONCE per row, then explode to
-    // (band, sig) pairs — signatures before the explode, or every band row
-    // recomputes all bands
-    val dictBands = dictSurf
-      .withColumn("sigs", bandSignatures(col("surface"), bands))
-      .select(col("concept_id"), col("surface"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
-
-    val mentionBands = fuzzyMentions
-      .withColumn("sigs", bandSignatures(col("mention"), bands))
-      .select(col("conv_id"), col("turn_idx"), col("mention"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
-
-    val jac = udf((a: String, b: String) => TextHash.charTrigramJaccard(a, b))
-    // dictionary band rows are tiny (nConcepts × bands): broadcast them
-    // explicitly so the plan never shuffles the mention side, with or
-    // without AQE. The candidate dedup shuffles ONLY the 4-column key —
-    // the surface string rejoins from the broadcast dictionary afterwards;
-    // carrying it through dropDuplicates inflates the hash-agg state and
-    // forces sort-fallback at scale.
-    mentionBands.join(broadcast(dictBands.drop("surface")), Seq("band", "sig"))
-      .select("conv_id", "turn_idx", "mention", "concept_id")
-      .dropDuplicates("conv_id", "turn_idx", "mention", "concept_id")
-      .join(broadcast(dictSurf), Seq("concept_id"))
-      .withColumn("jaccard", jac(col("mention"), col("surface")))
-      .filter(col("jaccard") >= jaccardMin && col("mention") =!= col("surface"))
-      .select(col("conv_id"), col("turn_idx"), col("mention"),
-        col("concept_id"),
-        lit(Schema.SkosCloseMatch).as("predicate_id"),
-        (col("jaccard") * 0.9).as("confidence"))
-  }
-
-  /** Fuzzy link via TF-IDF (rarest-token) blocking — the north rule's
-    * second blocking family alongside the MinHash bands above. Candidate
-    * generation follows the AllPairs rarest-element rule: each dictionary
-    * surface registers under its LOWEST-document-frequency token (df over
-    * the dictionary itself, ties on the token string), so head tokens
-    * ("the", a product name shared by thousands of concepts) never become
-    * hot blocking keys — the block key cardinality is bounded by the
-    * dictionary, and a mention only meets the concepts whose rarest token
-    * it contains. Verification is the same exact trigram-Jaccard as
-    * `linkFuzzy`.
+  /** Fuzzy link: every multi-word mention (≥ 7 chars) and concept whose
+    * normalized label has character-trigram Jaccard ≥ `jaccardMin` with
+    * it, the label itself excluded (that is an exact link), as
+    * skos:closeMatch at confidence `jaccard · 0.9`. The result equals the
+    * brute-force trigram-Jaccard set: there is no lossy blocking.
     *
-    * Recall shape vs brute-force trigram-Jaccard: a true pair is missed
-    * only when the mention does not contain the surface's rarest token
-    * verbatim (e.g. the typo sits exactly there) — reported by the recall
-    * witness in the spec, planted intact-synonym pairs are never missed.
-    *
-    * Scale shape: token df is an aggregation over the dictionary (small
-    * relative to the corpus); the block table (one row per dictionary
-    * surface) broadcasts; the mention side explodes to its distinct
-    * tokens and equi-joins — never shuffled by the raw mention, no
-    * cartesian anywhere.
+    * Shape: the dictionary labels are collected and indexed once
+    * (`SetSimJoin`, prefix index in rarest-trigram-first order) and the
+    * index is broadcast — the dictionary side was already broadcast by
+    * the blocking joins this replaces, so no new size assumption. The
+    * mention side is one UDF + `explode` per row: no shuffle, no join, no
+    * candidate dedup. A mention repeated within one turn yields one link
+    * row per occurrence.
     */
-  def linkFuzzyTfidf(mentions: DataFrame, dictionary: DataFrame,
+  def linkFuzzy(mentions: DataFrame, dictionary: DataFrame,
       jaccardMin: Double = 0.55): DataFrame = {
-    val fuzzyMentions = mentions
+    val dict = dictionary.select(col("concept_id"), normalize(col("label")))
+      .collect()
+    val ids = dict.map(_.getString(0))
+    val surfaces = dict.map(_.getString(1))
+    val index = SetSimJoin.build(
+      surfaces.map(TextHash.charTrigramSet).toIndexedSeq, jaccardMin)
+    val bc = mentions.sparkSession.sparkContext.broadcast((index, ids, surfaces))
+    val link = udf { (m: String) =>
+      val (ix, conceptIds, labels) = bc.value
+      ix.probe(TextHash.charTrigramSet(m)).toSeq.collect {
+        case (k, jaccard) if labels(k) != m => (conceptIds(k), jaccard)
+      }
+    }
+    mentions
       .filter(col("mention").contains(" ") && length(col("mention")) >= 7)
-    val dictSurf = dictionary.select(col("concept_id"),
-      normalize(col("label")).as("surface"))
-    val dictToks = dictSurf
-      .select(col("concept_id"), col("surface"),
-        explode(array_distinct(split(col("surface"), " "))).as("tok"))
-      .filter(length(col("tok")) > 0)
-    // df per token over the dictionary, then rarest token per surface
-    // ((df asc, tok asc) min-struct — deterministic)
-    val df = dictToks.groupBy("tok").agg(count(lit(1)).as("df"))
-    val blocks = dictToks.join(df, "tok")
-      .groupBy("concept_id", "surface")
-      .agg(min(struct(col("df"), col("tok"))).as("m"))
-      .select(col("concept_id"), col("m.tok").as("block"))
-    val mentionToks = fuzzyMentions
       .select(col("conv_id"), col("turn_idx"), col("mention"),
-        explode(array_distinct(split(col("mention"), " "))).as("block"))
-    val jac = udf((a: String, b: String) => TextHash.charTrigramJaccard(a, b))
-    mentionToks.join(broadcast(blocks), Seq("block"))
-      .select("conv_id", "turn_idx", "mention", "concept_id")
-      .dropDuplicates("conv_id", "turn_idx", "mention", "concept_id")
-      .join(broadcast(dictSurf), Seq("concept_id"))
-      .withColumn("jaccard", jac(col("mention"), col("surface")))
-      .filter(col("jaccard") >= jaccardMin && col("mention") =!= col("surface"))
+        explode(link(col("mention"))).as("l"))
       .select(col("conv_id"), col("turn_idx"), col("mention"),
-        col("concept_id"),
+        col("l._1").as("concept_id"),
         lit(Schema.SkosCloseMatch).as("predicate_id"),
-        (col("jaccard") * 0.9).as("confidence"))
+        (col("l._2") * 0.9).as("confidence"))
   }
 
   /** Candidate links → SSSOM mapping rows. */

@@ -73,7 +73,7 @@ object TextHash extends Serializable {
     * set representation: boxed immutable.HashSet[Long] was 40% of all
     * executor CPU samples in the fuzzy-link profile).
     */
-  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+  private[graft] def distinctSorted(xs: Array[Long]): Array[Long] = {
     if (xs.length <= 1) return xs
     java.util.Arrays.sort(xs)
     var n = 1; var i = 1
@@ -331,10 +331,16 @@ object TextHash extends Serializable {
     }
   }
 
+  /** Distinct sorted character-trigram hash set — the exact set whose
+    * Jaccard `charTrigramJaccard` computes.
+    */
+  def charTrigramSet(s: String): Array[Long] =
+    distinctSorted(charTrigramHashes(s))
+
   /** Character-trigram Jaccard similarity. */
   def charTrigramJaccard(a: String, b: String): Double = {
-    val sa = distinctSorted(charTrigramHashes(a))
-    val sb = distinctSorted(charTrigramHashes(b))
+    val sa = charTrigramSet(a)
+    val sb = charTrigramSet(b)
     if (sa.isEmpty && sb.isEmpty) 1.0
     else if (sa.isEmpty || sb.isEmpty) 0.0
     else jaccardSorted(sa, sb)

@@ -94,23 +94,24 @@ class PlanAuditSpec extends SparkSpec {
     assert(keep.toSeq == Seq(1L, 4L, 5L, 6L, 7L, 8L, 9L, 10L))
   }
 
-  test("linkFuzzyTfidf plans broadcast equi-joins, never a cartesian") {
+  test("linkFuzzy plans one UDF + explode over its input: no join, no " +
+      "shuffle join, no aggregate") {
     import spark.implicits._
     // repartition defeats ConvertToLocalRelation constant-folding so the
-    // join shape is actually planned
+    // linker's own operators are actually planned
     val mentions = Seq(("c1", 0, "protein kinase alpha"),
       ("c1", 1, "gamma receptor site"))
       .toDF("conv_id", "turn_idx", "mention").repartition(2)
     val dict = Seq(("C:1", "protein kinase alpha", "pk"),
       ("C:2", "gamma receptor", "gr"))
       .toDF("concept_id", "label", "synonyms").repartition(2)
-    val p = graft.kg.Linker.linkFuzzyTfidf(mentions, dict)
+    val p = graft.kg.Linker.linkFuzzy(mentions, dict)
       .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"),
-      s"TF-IDF blocking must stay equi-join:\n${p.take(1500)}")
-    assert(p.contains("BroadcastHashJoin"),
-      "the dictionary block table must broadcast")
+    Seq("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin",
+      "ShuffledHashJoin", "BroadcastHashJoin", "HashAggregate").foreach { op =>
+      assert(!p.contains(op), s"linkFuzzy plans a $op:\n${p.take(1500)}")
+    }
+    assert(p.contains("Generate"), s"no explode in:\n${p.take(1500)}")
   }
 
   test("KG analytics family: every plan stays equi-join (no cartesian)") {

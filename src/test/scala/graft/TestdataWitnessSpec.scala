@@ -106,17 +106,43 @@ class TestdataWitnessSpec extends SparkSpec {
     assert(pairs == expected)
   }
 
-  test("q_kg_triples @ sf0.01 pinned: 621 rows, stable content hash") {
+  test("q_kg_triples @ sf0.01 pinned: 634 rows, stable content hash; " +
+      "closeMatch triples equal the brute-force reference") {
     assume(has("documents")) // any sf0.01 presence marker; input is synthetic
     val out = SparkEntry.queries("q_kg_triples")(spark, sfDir)
     val cols = out.columns.sorted
     val rows = out.select(cols.map(col).toIndexedSeq: _*).collect()
       .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-    assert(rows.length == 621)
+    assert(rows.length == 634)
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(rows.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    assert(md == "2eedefc6bd3d11a56e2c9cf439e606ac")
+    assert(md == "f9e0b14c0d390f85f8ddca3cc51e8f8f")
+    // the query's config (nConv 300, 200 concepts): closeMatch triples are
+    // the synonym links plus every multi-word mention (>= 7 chars) with
+    // trigram Jaccard >= 0.55 against a label it is not equal to
+    import graft.kg.{Linker, Synthetic}
+    val mentions = Linker.detectMentions(Synthetic.transcripts(spark, 300L, 6, 200L))
+      .select("mention").distinct().as[String].collect()
+    val dict = Synthetic.dictionary(spark, 200L)
+      .select(col("concept_id"), Linker.normalize(col("label")),
+        Linker.normalize(col("synonyms")))
+      .as[(String, String, String)].collect()
+    val synonym = for {
+      (cid, _, syn) <- dict; m <- mentions if m == syn
+    } yield (m, cid)
+    val fuzzy = for {
+      m <- mentions if m.contains(" ") && m.length >= 7
+      (cid, label, _) <- dict
+      if m != label && TextHash.charTrigramJaccard(m, label) >= 0.55
+    } yield (m, cid)
+    val expected = (synonym ++ fuzzy).map { case (m, cid) =>
+      ("txt:" + m.replace(" ", "_"), cid) }.toSet
+    val close = out.filter(col("predicate_id") === "skos:closeMatch")
+      .select("subject_id", "object_id").as[(String, String)].collect()
+    assert(close.length == close.toSet.size)
+    assert(fuzzy.nonEmpty && close.toSet == expected,
+      s"missing ${expected -- close.toSet}; extra ${close.toSet -- expected}")
   }
 
   test("q_embed_neardup_lsh @ sf0.01: subset of the exact arm with " +

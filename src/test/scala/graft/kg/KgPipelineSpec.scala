@@ -91,24 +91,23 @@ class KgPipelineSpec extends SparkSpec {
     }
   }
 
-  test("linkFuzzyTfidf: rarest-token blocking finds every pair whose " +
-      "mention carries the surface's rarest token; verification exact") {
+  test("linkFuzzy: lossless, equals the brute-force trigram-Jaccard set " +
+      "(typo'd rarest token included); verification exact") {
     import graft.text.TextHash
     val dict = Seq(
       ("C:1", "protein kinase alpha", "pk alpha"),
       ("C:2", "protein kinase beta", "pk beta"),
       ("C:3", "gamma receptor", "gr")).toDF("concept_id", "label", "synonyms")
     val mentions = Seq(
-      // contains C:1's rarest token ("alpha", df=1) intact -> MUST link
       (("c1", 0, "protein kinase alpha x")),
-      // typo exactly in the rarest token -> documented blocking miss
+      // typo exactly in the rarest token: the old rarest-token blocking
+      // missed this true pair
       (("c1", 1, "protein kinase alpa")),
-      // rarest-token tie (gamma/receptor both df=1) breaks on token asc
       (("c2", 0, "gamma receptor q")),
-      // unrelated -> no candidate survives verification
+      // unrelated -> no pair
       (("c2", 1, "completely different words"))
     ).toDF("conv_id", "turn_idx", "mention")
-    val out = Linker.linkFuzzyTfidf(mentions, dict, jaccardMin = 0.55)
+    val out = Linker.linkFuzzy(mentions, dict, jaccardMin = 0.55)
       .select("mention", "concept_id", "confidence")
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2))
       .toMap
@@ -122,46 +121,76 @@ class KgPipelineSpec extends SparkSpec {
     assert(out.contains(("protein kinase alpha x", "C:1")))
     assert(out.contains(("gamma receptor q", "C:3")))
     assert(!out.keySet.exists(_._1 == "completely different words"))
-    // the typo'd-rarest-token pair IS a true brute-force pair (the
-    // documented blocking miss: recall < 1 exactly and only there)
     assert(TextHash.charTrigramJaccard("protein kinase alpa",
       "protein kinase alpha") >= 0.55)
-    assert(!out.contains(("protein kinase alpa", "C:1")))
-    // recall guarantee over the synthetic corpus: every brute-force pair
-    // whose mention contains the surface's rarest token is found
+    assert(out.contains(("protein kinase alpa", "C:1")))
+    // equality with brute force over the synthetic corpus
     val t = Synthetic.transcripts(spark, 80, 4, 40)
     val d = Synthetic.dictionary(spark, 40)
     val ms = Linker.detectMentions(t)
-      .filter(col("mention").contains(" ") && length(col("mention")) >= 7)
-      .select("conv_id", "turn_idx", "mention")
-    val found = Linker.linkFuzzyTfidf(ms, d)
-      .select("mention", "concept_id").distinct()
-      .as[(String, String)].collect().toSet
+    val found = Linker.linkFuzzy(ms, d)
+      .select("mention", "concept_id", "confidence")
+      .as[(String, String, Double)].collect().toSet
     val surf = d.select(col("concept_id"),
       Linker.normalize(col("label")).as("surface"))
       .as[(String, String)].collect()
-    val dfTok = surf.flatMap(_._2.split(" ").distinct).groupBy(identity)
-      .map { case (k, v) => k -> v.length }
-    val rarest = surf.map { case (cid, s) =>
-      cid -> s.split(" ").distinct.minBy(tok => (dfTok(tok), tok)) }.toMap
-    val mset = ms.select("mention").distinct().as[String].collect()
+    val mset = ms.filter(col("mention").contains(" ") &&
+        length(col("mention")) >= 7)
+      .select("mention").distinct().as[String].collect()
     val brute = for {
       m <- mset; (cid, s) <- surf
-      if m != s && TextHash.charTrigramJaccard(m, s) >= 0.55
-    } yield (m, cid)
-    val guaranteed = brute.filter { case (m, cid) =>
-      m.split(" ").contains(rarest(cid)) }
-    assert(guaranteed.toSet.subsetOf(found),
-      s"guaranteed pairs missed: ${guaranteed.toSet -- found}")
-    info(s"recall vs brute force: ${(brute.toSet & found).size}/${brute.toSet.size}")
-    // reachable from spark-submit: --blocking tfidf selects this family
-    // end-to-end; unknown families fail fast
-    val tfCfg = KgMain.parse(Array("--out", "/tmp/kg_unused",
-      "--conv", "50", "--blocking", "tfidf"))
-    assert(tfCfg.blocking == "tfidf")
-    assert(KgPipeline.extractMappings(spark, tfCfg).count() > 0)
-    intercept[IllegalArgumentException] {
-      KgPipeline.extractMappings(spark, tfCfg.copy(blocking = "nope")).count()
+      j = TextHash.charTrigramJaccard(m, s)
+      if m != s && j >= 0.55
+    } yield (m, cid, j * 0.9)
+    assert(brute.nonEmpty)
+    assert(found == brute.toSet,
+      s"missed ${brute.toSet -- found}; extra ${found -- brute.toSet}")
+  }
+
+  test("crash mid-group: a failed group write throws, leaves that group " +
+      "unmarked and the others complete; the rerun runs only it") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val small = cfg.copy(nConv = 120L)
+    val graph = KgPipeline.buildGraph(KgPipeline.extractMappings(spark, small))
+      .localCheckpoint(true)
+    val refCfg = small.copy(
+      outDir = Files.createTempDirectory("kg_crash_ref").toString)
+    KgPipeline.materialize(spark, graph, refCfg)
+    val vicCfg = small.copy(
+      outDir = Files.createTempDirectory("kg_crash").toString)
+    // block group 1's edge write: a dangling symlink where its directory
+    // goes. (A regular file would not do: SaveMode.Overwrite deletes what
+    // exists at the path. The dangling link reads as absent, so it is not
+    // deleted, and no directory can be made through it.)
+    val blocker = Paths.get(vicCfg.outDir, "edges", "group=1")
+    Files.createDirectories(blocker.getParent)
+    Files.createSymbolicLink(blocker, Paths.get(vicCfg.outDir, "missing"))
+    val e = intercept[Exception](KgPipeline.materialize(spark, graph, vicCfg))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("edges/group=1")), e)
+    val ledger = Paths.get(vicCfg.outDir, "_ledger.jsonl")
+    def grp(l: String): Option[Int] =
+      "\"group\":(\\d+)".r.findFirstMatchIn(l).map(_.group(1).toInt)
+    val lines = Files.readAllLines(ledger).asScala.toSeq
+    val refLines = Files.readAllLines(
+      Paths.get(refCfg.outDir, "_ledger.jsonl")).asScala.toSeq
+    assert(!lines.exists(l => grp(l).contains(1)), "group 1 left ledger lines")
+    (0 until small.resumeGroups).filter(_ != 1).foreach { g =>
+      assert(lines.count(l => grp(l).contains(g) &&
+        l.contains("\"status\":\"complete\"")) == 1, s"group $g markers")
+      assert(lines.filter(l => grp(l).contains(g)).sorted ==
+        refLines.filter(l => grp(l).contains(g)).sorted, s"group $g lineage")
+    }
+    Files.delete(blocker)
+    val r = KgPipeline.materialize(spark, graph, vicCfg)
+    assert(r.groupsRun == 1 && r.groupsSkipped == small.resumeGroups - 1, s"$r")
+    assert(Files.readAllLines(ledger).asScala.sorted == refLines.sorted)
+    for (table <- Seq("edges", "nodes")) {
+      val a = spark.read.parquet(s"${refCfg.outDir}/$table")
+      val b = spark.read.parquet(s"${vicCfg.outDir}/$table")
+      assert(a.count() == b.count() && a.exceptAll(b).count() == 0 &&
+        b.exceptAll(a).count() == 0, s"$table diverged after crash rerun")
     }
   }
 
