@@ -4,18 +4,28 @@
     python3 scripts/ab_bench.py --parent HEAD~1 --workload kg_build \
         --pairs 10 --seconds 14 --seeds 1,2,3
 
-Run from the repository root. The parent is checked out with
-`git worktree` under /tmp (or taken from --parent-dir, an existing
+Run from the repository root. The parent is checked out in a local
+`git clone` under $TMPDIR (or taken from --parent-dir, an existing
 checkout of it) and `perfbench/run.py` runs in N alternating pairs: pair i
 runs the parent first when i is even and the change first when it is odd,
 and uses seed seeds[i % len(seeds)]. Each side builds from its own
 sources into its own .bench_build.
 
 For every end-to-end metric the script prints each side's median and
-quartiles over the pairs, and how many pairs the change won (ties count
-for neither side). A gain holds when the change wins at least nine
-tenths of the pairs and the medians differ by more than the parent's
-interquartile range. Every run's metrics go to --out as JSON.
+quartiles over the pairs, how many pairs the change won (ties count
+for neither side), whether a gain holds, and a no-regression verdict:
+
+  gain        the change wins at least nine tenths of the pairs and the
+              medians differ by more than the parent's interquartile range
+  worse       the change's median is worse than the parent's by more than
+              the metric's `bound` in BENCHMARK.json, relative to the
+              parent's median
+  unresolved  not worse, but either side's interquartile range exceeds
+              bound x that side's median, so the runs spread too widely
+              to tell
+  ok          neither
+
+Every run's metrics go to --out as JSON.
 """
 
 import argparse
@@ -36,6 +46,16 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, med, q3
+
+
+def verdict(p, c, lower_better, bound):
+    """'worse', 'unresolved' or 'ok' for parent and change quartiles."""
+    sign = 1 if lower_better else -1
+    if sign * (c[1] - p[1]) > bound * abs(p[1]):
+        return "worse"
+    if any(q[2] - q[0] > bound * abs(q[1]) for q in (p, c)):
+        return "unresolved"
+    return "ok"
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -67,16 +87,21 @@ def main():
         ap.error("--pairs must be at least 1")
     seeds = [int(s) for s in a.seeds.split(",")]
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        metrics = {m["name"]: m for m in json.load(f)["end_to_end"]}
 
-    worktree = None
+    # a clone, not a worktree: it leaves nothing in this repository's .git
+    clone = None
     parent_dir = a.parent_dir
     if parent_dir is None:
-        worktree = tempfile.mkdtemp(prefix="ab_bench_", dir="/tmp")
-        os.rmdir(worktree)
-        subprocess.run(["git", "worktree", "add", "--detach", worktree, a.parent],
-                       cwd=ROOT, check=True, capture_output=True)
-        parent_dir = worktree
+        sha = subprocess.run(["git", "rev-parse", "--verify", a.parent + "^{commit}"],
+                             cwd=ROOT, check=True, capture_output=True,
+                             text=True).stdout.strip()
+        clone = tempfile.mkdtemp(prefix="ab_bench_")
+        subprocess.run(["git", "clone", "--quiet", "--no-checkout", ROOT, clone],
+                       check=True, capture_output=True)
+        subprocess.run(["git", "checkout", "--quiet", "--detach", sha],
+                       cwd=clone, check=True, capture_output=True)
+        parent_dir = clone
     runs = []
     try:
         for i in range(a.pairs):
@@ -93,10 +118,8 @@ def main():
                 for m in ("wall_s", "scaling_eff", "triple_recall")
                 if m in pair["parent"]), flush=True)
     finally:
-        if worktree:
-            subprocess.run(["git", "worktree", "remove", "--force", worktree],
-                           cwd=ROOT, capture_output=True)
-            shutil.rmtree(worktree, ignore_errors=True)
+        if clone:
+            shutil.rmtree(clone, ignore_errors=True)
 
     os.makedirs(os.path.dirname(a.out), exist_ok=True)
     with open(a.out, "w") as f:
@@ -109,17 +132,19 @@ def main():
           f"{sum(r['change_failed'] for r in runs)}/"
           f"{sum(r['change_attempted'] for r in runs)}")
     print(f"{'metric':<17} {'parent q1 / median / q3':>30} "
-          f"{'change q1 / median / q3':>30}  wins  gain")
-    for m in better:
+          f"{'change q1 / median / q3':>30}  wins  gain  verdict")
+    for m, spec in metrics.items():
         p = [r["parent"][m] for r in runs]
         c = [r["change"][m] for r in runs]
-        sign = -1 if better[m] == "lower" else 1
+        lower = spec["better"] == "lower"
+        sign = -1 if lower else 1
         wins = sum(1 for x, y in zip(p, c) if sign * (y - x) > 0)
         pq, cq = quartiles(p), quartiles(c)
         gain = wins >= 0.9 * n and sign * (cq[1] - pq[1]) > pq[2] - pq[0]
         print(f"{m:<17} {pq[0]:>9.4g} / {pq[1]:>8.4g} / {pq[2]:<9.4g} "
               f"{cq[0]:>9.4g} / {cq[1]:>8.4g} / {cq[2]:<9.4g} {wins:>2}/{n}  "
-              f"{'yes' if gain else 'no'}")
+              f"{'yes' if gain else 'no':<4}  "
+              f"{verdict(pq, cq, lower, spec['bound'])}")
 
 
 if __name__ == "__main__":

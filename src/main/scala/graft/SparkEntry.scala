@@ -570,8 +570,8 @@ object SparkEntry {
     // fuzzy decontamination: per-(document, benchmark item) containment
     // |A∩B|/|B| ≥ t — catches a benchmark item EMBEDDED in a long
     // document, which the doc-level contamination ratio and symmetric
-    // Jaccard both miss; benchmark prefix table broadcasts, corpus never
-    // shuffles by shingle
+    // Jaccard both miss; the benchmark's containment index is broadcast
+    // and each corpus document probes it once: no join, no shuffle
     "q_doc_decontaminate_fuzzy" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       Dedup.decontaminateFuzzy(

@@ -1,8 +1,8 @@
 package graft.dedup
 
-import graft.text.{TextHash, TextOps}
+import graft.sim.SetSimJoin
+import graft.text.TextHash
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, each scaling to
@@ -10,16 +10,26 @@ import org.apache.spark.sql.functions._
   *
   *  - exact: hash-groupBy on normalized content;
   *  - MinHash + LSH: word-shingle min-hash signatures banded into buckets,
-  *    candidate pairs only within buckets (no all-pairs);
+  *    candidate pairs only within buckets (no all-pairs), shingle-Jaccard
+  *    verify; an incremental arm against a persisted banding index;
   *  - SimHash: 64-bit hyperplane-free simhash from token hashes, near-dup
   *    when Hamming distance ≤ k (banded on two-chunk combinations of k+2
   *    chunks — pigeonhole guarantees full recall at the requested
-  *    distance with wide join keys);
-  *  - n-gram Jaccard: verification metric on candidate pairs;
+  *    distance with wide join keys), and a 128-bit arm;
+  *  - n-gram Jaccard: exact near-dup pairs, the self-join shape of
+  *    `graft.sim.SetSimJoin`;
+  *  - repeated spans: positional k-gram substring dedup, coverage and
+  *    removal;
+  *  - benchmark decontamination: exact shingle overlap (counting, flag-only
+  *    and Bloom arms) and per-item containment, the R–S shape of
+  *    `SetSimJoin`;
   *  - embedding cosine: see graft.sim.Similarity.
   *
-  * All column-expression based (codegen); the only shuffles are the
-  * bucket joins and group-bys, each keyed to spread uniformly.
+  * The set-similarity operators only tokenize and name columns: every
+  * prefix, length and overlap bound lives in `SetSimJoin`. Text-hashing
+  * kernels are JIT'd Scala UDFs (graft.text.TextHash); the shuffles are
+  * the bucket and prefix joins and the group-bys, each keyed to spread
+  * uniformly, and they carry ids and hashes, never text.
   */
 object Dedup {
 
@@ -64,40 +74,18 @@ object Dedup {
     */
   def minhashNearDups(documentsIn: DataFrame, perms: Int = 32, bands: Int = 8,
       k: Int = 3, threshold: Double = 0.7): DataFrame = {
-    val rows = perms / bands
-    // the minhash signature pass is the compute-heavy stage — spread it
-    // when the input's file layout under-parallelizes (see SparkUtil)
-    val documents = graft.core.SparkUtil.spread(documentsIn)
-    // materialize the signatures: the banding table self-joins below, and
-    // Catalyst plans each join side as an independent subtree (no CSE) —
-    // without the boundary every document is shingled and min-hashed
-    // TWICE. 32 longs/doc materialized vs ~16k hash mixes re-run.
-    val sigs = documents.select(col("doc_id"),
-      minhashSignature(col("text"), perms, k).as("sig"))
+    // materialize the banding table: it self-joins below, and Catalyst
+    // plans each join side as an independent subtree (no CSE) — without
+    // the boundary every document is shingled and min-hashed TWICE
+    val banded = minhashIndex(documentsIn, perms, bands, k)
       .localCheckpoint(true)
-    val banded = sigs.withColumn("band",
-      explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("bucket",
-        xxhash64(col("band"),
-          array_join(slice(col("sig"), col("band") * rows + 1, lit(rows)), ",")))
-      .select(col("doc_id"), col("band"), col("bucket"))
-
     val a = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
     val b = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_b"))
     val pairs = a.join(b, Seq("band", "bucket"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .dropDuplicates("doc_a", "doc_b")
-
-    val texts = documents.select(col("doc_id"), col("text"))
-    pairs
-      .join(texts.select(col("doc_id").as("doc_a"), col("text").as("text_a")),
-        Seq("doc_a"))
-      .join(texts.select(col("doc_id").as("doc_b"), col("text").as("text_b")),
-        Seq("doc_b"))
-      .withColumn("jaccard", jaccardUdf(k)(col("text_a"), col("text_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    verifyPairs(pairs, documentsIn, k, threshold)
   }
 
   /** Persisted MinHash-LSH index of a corpus snapshot: the
@@ -110,6 +98,8 @@ object Dedup {
   def minhashIndex(documentsIn: DataFrame, perms: Int = 32, bands: Int = 8,
       k: Int = 3): DataFrame = {
     val rows = perms / bands
+    // the minhash signature pass is the compute-heavy stage — spread it
+    // when the input's file layout under-parallelizes (see SparkUtil)
     val documents = graft.core.SparkUtil.spread(documentsIn)
     val sigs = documents.select(col("doc_id"),
       minhashSignature(col("text"), perms, k).as("sig"))
@@ -162,8 +152,16 @@ object Dedup {
       .select(col("new_id").as("doc_a"), col("doc_b"))
     val pairs = oldPairs.unionByName(newPairs)
       .dropDuplicates("doc_a", "doc_b")
-    val texts = corpusTexts.select(col("doc_id"), col("text"))
-      .unionByName(newDocs.select(col("doc_id"), col("text")))
+    verifyPairs(pairs, corpusTexts.select(col("doc_id"), col("text"))
+      .unionByName(newDocs.select(col("doc_id"), col("text"))), k, threshold)
+  }
+
+  /** The MinHash verify: candidate (doc_a, doc_b) pairs whose shingle
+    * Jaccard over the (doc_id, text) rows of `texts` is ≥ `threshold`, as
+    * (doc_a, doc_b, jaccard). Only candidate ids read the text.
+    */
+  private def verifyPairs(pairs: DataFrame, texts: DataFrame, k: Int,
+      threshold: Double): DataFrame =
     pairs
       .join(texts.select(col("doc_id").as("doc_a"), col("text").as("text_a")),
         Seq("doc_a"))
@@ -172,7 +170,6 @@ object Dedup {
       .withColumn("jaccard", jaccardUdf(k)(col("text_a"), col("text_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-  }
 
   /** Shingle Jaccard similarity of two texts. */
   def jaccardUdf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
@@ -213,7 +210,7 @@ object Dedup {
     * move is a wider (128-bit) simhash, not more chunks.
     */
   def simhashNearDups(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val (nChunks, widths, offsets, joined, _) =
+    val (nChunks, widths, offsets, joined) =
       simhashComboJoin(documents, maxHamming)
     // canonical-route + Hamming verify in ONE map-side filter: a pair at
     // distance d matches through C(m−d, 2) ≥ 1 combination keys; keeping
@@ -331,20 +328,12 @@ object Dedup {
     simhashComboJoin(documents, maxHamming)._4
       .dropDuplicates("doc_a", "doc_b")
 
-  private[graft] def simhashRawJoinCount(documents: DataFrame,
-      maxHamming: Int): Long =
-    simhashComboJoin(documents, maxHamming)._4.count()
-
-  private[graft] def simhashBuckets(documents: DataFrame,
-      maxHamming: Int): DataFrame =
-    simhashComboJoin(documents, maxHamming)._5
-
   /** Shared banding core: explode each doc's C(m,2) two-chunk combination
     * band keys (m = maxHamming + 2, single-pass JIT'd kernel) and
     * self-equi-join on (combo, value bucket).
     */
   private def simhashComboJoin(documentsIn: DataFrame, maxHamming: Int)
-      : (Int, Array[Int], Array[Int], DataFrame, DataFrame) = {
+      : (Int, Array[Int], Array[Int], DataFrame) = {
     require(maxHamming >= 0 && maxHamming <= 62,
       s"maxHamming must be in [0, 62], got $maxHamming")
     val documents = graft.core.SparkUtil.spread(documentsIn)
@@ -373,37 +362,25 @@ object Dedup {
       col("doc_id").as("doc_b"), col("sig").as("sig_b"))
     val joined = a.join(b, Seq("combo", "key"))
       .filter(col("doc_a") < col("doc_b"))
-    (nChunks, widths, offsets, joined, chunked)
+    (nChunks, widths, offsets, joined)
   }
 
-  /** Exact n-gram Jaccard near-dup join via AllPairs/PPJoin-style prefix
-    * filtering (public algorithm family: Bayardo et al., "Scaling Up All
-    * Pairs Similarity Search", WWW'07; Xiao et al., "Efficient Similarity
-    * Joins for Near Duplicate Detection", WWW'08): every document pair
-    * whose word-k-gram shingle-set Jaccard reaches `threshold`, found
-    * WITHOUT an all-pairs comparison and with full recall —
+  /** Exact n-gram Jaccard near-dup join: every document pair whose
+    * word-k-gram shingle-set Jaccard reaches `threshold`, with full recall
+    * and without an all-pairs comparison. Each document is tokenized once
+    * into a (doc_id, distinct shingle-hash set) table, which
+    * `graft.sim.SetSimJoin.selfJoin` (AllPairs prefix filter in
+    * global-rarity order, PPJoin length and positional filters, exact
+    * verify) consumes for the document frequencies, the prefix and the
+    * verify. Every shuffle carries (doc_id, shingle-hash) longs, never
+    * text.
     *
-    *  - order every set by global shingle rarity (document frequency asc,
-    *    hash asc: one total order for the whole corpus);
-    *  - prefix of a size-n set = its first n − ⌈t·n⌉ + 1 elements. If
-    *    J(A,B) ≥ t then the FIRST common element in the global order lies
-    *    inside BOTH prefixes (were it outside A's, the ≥ ⌈t·n_A⌉ ordered
-    *    predecessors in A would all be non-shared, capping the overlap at
-    *    ⌈t·n_A⌉ − 1 < t·n_A ≤ t/(1+t)·(n_A+n_B), the minimum overlap
-    *    J ≥ t demands given the size bound n_B ≥ t·n_A) — so the
-    *    equi-join on PREFIX shingles alone misses nothing;
-    *  - candidates then verify with the exact merge-count Jaccard kernel.
-    *
-    * Scale shape: every shuffle carries (doc_id, shingle_hash) longs —
-    * never text or shingle strings; prefix shingles are by construction
-    * the globally RAREST elements of each set, so the self-join's bucket
-    * sizes are bounded by rare-key document frequencies rather than
-    * stop-shingle frequencies (the failure mode of a naive inverted-index
-    * join), and the length filter n_b ∈ [t·n_a, n_a/t] prunes before the
-    * pair-dedup. The exploded shingle table is materialized once — it
-    * feeds the frequency count, the prefix window and both join sides,
-    * and Catalyst re-executes unmaterialized branches (no cross-branch
-    * CSE); ~16 B/shingle stored vs re-tokenizing the corpus three times.
+    * The shingle table has three consumers and Catalyst does not share a
+    * subtree across branches, so by default it is materialized once
+    * (`localCheckpoint`, ~8 B a shingle on executor disk). With
+    * `materializeShingles = false` each consumer re-tokenizes instead:
+    * no intermediate storage, for inputs where the shingle table rivals
+    * the corpus. The pairs are identical.
     *
     * Output (doc_a, doc_b, jaccard), doc_a < doc_b — jaccard is
     * |A∩B| / |A∪B| over distinct shingle sets, so the whole operator is
@@ -415,91 +392,12 @@ object Dedup {
   def ngramJaccardNearDups(documentsIn: DataFrame, k: Int = 3,
       threshold: Double = 0.5,
       materializeShingles: Boolean = true): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val documents = graft.core.SparkUtil.spread(documentsIn)
     val shSet = udf((t: String) => TextHash.shingleHashSet(t, k))
-    // the shingle table feeds two branches (document frequency AND the
-    // prefix build) — Catalyst has no cross-branch CSE, so either
-    // materialize it once (default: ~8 B/token to executor disk, the
-    // right trade below ~TB inputs) or recompute it per branch
-    // (materializeShingles = false: two tokenize passes, ZERO
-    // intermediate storage — the right trade at crawl scale, where the
-    // shingle table rivals the corpus itself; same rationale as
-    // decontaminateFuzzy's documented 3-pass design). Results identical.
-    val sh0 = documents
-      .select(col("doc_id"), explode(shSet(col("text"))).as("sh"))
-    val sh = if (materializeShingles) sh0.localCheckpoint(true) else sh0
-    val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy("doc_id")
-    val order = byDoc.orderBy(col("df").asc, col("sh").asc)
-    // one exchange by doc_id serves both window functions (set size and
-    // rarity rank); ceil guarded an ulp low so FP can only LENGTHEN the
-    // prefix (extra candidates), never shorten it (lost recall)
-    // df >= 2 prefilter is LOSSLESS for the pair join below: a shingle
-    // shared by docs a and b has document frequency >= 2 by definition,
-    // so a df=1 prefix entry joins with nothing (it can only meet its own
-    // doc, which doc_a < doc_b discards). Dropping those rows AFTER the
-    // prefix positions (n, rn) are fixed cuts the self-join input by the
-    // unique-shingle mass — the dominant fraction on real corpora — while
-    // p_a/p_b keep their full-prefix positions, so the PPJoin positional
-    // bound is unchanged and every true pair still survives through its
-    // first shared element.
-    val prefix = graft.core.SparkUtil.materializeOnce(
-      sh.join(dfreq, "sh")
-        .withColumn("n", count(lit(1)).over(byDoc))
-        .withColumn("rn", row_number().over(order))
-        .filter(col("rn") <= col("n") - ceil(col("n") * threshold - 1e-9) + 1)
-        .filter(col("df") >= 2L)
-        .select(col("sh"), col("doc_id"), col("n"), col("rn")))
-    val a = prefix.select(col("sh"), col("doc_id").as("doc_a"),
-      col("n").as("n_a"), col("rn").as("p_a"))
-    val b = prefix.select(col("sh"), col("doc_id").as("doc_b"),
-      col("n").as("n_b"), col("rn").as("p_b"))
-    // PPJoin positional filter (lossless): at a pair's FIRST shared
-    // element — positions p_a, p_b in the global sort — everything
-    // earlier on each side is non-shared, so the overlap is at most
-    // 1 + min(n_a − p_a, n_b − p_b); J ≥ t needs overlap ≥
-    // ⌈t/(1+t)·(n_a+n_b)⌉, so rows whose positional bound falls short
-    // cannot be a first match and a true pair always survives through
-    // its first-match row. Cuts candidate volume before the pair-dedup.
-    val overlapBound = lit(1.0) +
-      least(col("n_a") - col("p_a"), col("n_b") - col("p_b"))
-    val requiredOverlap =
-      (col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - 1e-9
-    // n_a/n_b ride along (identical for every row of a pair, so the
-    // pair-keyed dedup is unaffected) — the verify below needs only the
-    // intersection size once the set sizes are known
-    val cand = a.join(b, Seq("sh"))
-      .filter(col("doc_a") < col("doc_b") &&
-        col("n_b") >= col("n_a") * threshold - 1e-9 &&
-        col("n_a") >= col("n_b") * threshold - 1e-9 &&
-        overlapBound >= requiredOverlap)
-      .select("doc_a", "doc_b", "n_a", "n_b")
-      .dropDuplicates("doc_a", "doc_b")
-    // Verify against each doc's PRECOMPUTED distinct shingle set instead
-    // of re-tokenizing both texts per candidate pair (the old jaccardUdf
-    // re-ran the shingle kernel 2× per candidate; candidates outnumber
-    // true pairs by orders of magnitude, so tokenization dominated the
-    // verify stage — guide §1.2 "per-task work"). One tokenize pass over
-    // the corpus, then a codegen'd array_intersect per pair. Bit-identical
-    // result: both sets are the same distinct shingle sets the UDF built
-    // internally, n_x equals the set size (the window count over the
-    // exploded distinct set), and inter/(n_a+n_b-inter) divides the same
-    // exactly-representable integers — a candidate's sets are never empty
-    // (it has at least one prefix row), so the UDF's empty-set branches
-    // cannot fire on this path.
-    val docSets = documents.select(col("doc_id"), shSet(col("text")).as("shs"))
-    cand
-      .join(docSets.select(col("doc_id").as("doc_a"), col("shs").as("sa")),
-        Seq("doc_a"))
-      .join(docSets.select(col("doc_id").as("doc_b"), col("shs").as("sb")),
-        Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    val sets = graft.core.SparkUtil.spread(documentsIn)
+      .select(col("doc_id").as("id"), shSet(col("text")).as("set"))
+    SetSimJoin.selfJoin(
+        if (materializeShingles) sets.localCheckpoint(true) else sets, threshold)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
   }
 
   /** Repeated-span detection — the substring-level dedup primitive from
@@ -678,31 +576,6 @@ object Dedup {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
 
-  /** Benchmark decontamination — the evaluation-set n-gram-overlap scan
-    * from the published LM training-data methodology (GPT-3's 13-gram
-    * test-set filter, Brown et al. 2020 appendix C; Dodge et al. 2021's
-    * C4 benchmark-overlap audit): flag every corpus document that shares
-    * at least one word-k-gram with any benchmark document, with exact
-    * per-document overlap counts and the contaminated fraction of its
-    * distinct shingle set.
-    *
-    * Scale shape: the benchmark side is tiny relative to the corpus
-    * (evaluation suites are megabytes against a 100 TB crawl), so its
-    * DISTINCT shingle-hash set is broadcast — the corpus is never
-    * shuffled by shingle. The corpus side is one projection (a single
-    * shingle-kernel pass, k 8-byte hashes per position), a map-side
-    * broadcast probe, and one groupBy(doc_id) whose partial aggregation
-    * collapses each document's rows to one before the exchange, so the
-    * only shuffle carries ~n_docs count rows. Output (doc_id, n_ngrams,
-    * n_shared, contamination) for contaminated documents only; both
-    * counts are over the document's distinct shingle set and
-    * `contamination` is an exact integer-ratio double, so the operator is
-    * ANSI-SQL-expressible and DuckDB-oracled exactly (shingle-hash
-    * equality ≡ shingle-string equality: the chained-FNV shingle hash is
-    * injective on the corpus modulo 2⁻⁶⁴ collisions, and the ' '-join of
-    * whitespace-free tokens is injective — same argument as
-    * `ngramJaccardNearDups`'s oracle).
-    */
   /** Flag-only arm of benchmark decontamination: (doc_id) rows for the
     * documents sharing ≥ 1 `k`-gram with the benchmark — EXACTLY the
     * doc set `decontaminate` emits (its n_shared ≥ 1 filter), without
@@ -741,6 +614,31 @@ object Dedup {
     corpus.filter(hit(col("text"))).select(col("doc_id"))
   }
 
+  /** Benchmark decontamination — the evaluation-set n-gram-overlap scan
+    * from the published LM training-data methodology (GPT-3's 13-gram
+    * test-set filter, Brown et al. 2020 appendix C; Dodge et al. 2021's
+    * C4 benchmark-overlap audit): flag every corpus document that shares
+    * at least one word-k-gram with any benchmark document, with exact
+    * per-document overlap counts and the contaminated fraction of its
+    * distinct shingle set.
+    *
+    * Scale shape: the benchmark side is tiny relative to the corpus
+    * (evaluation suites are megabytes against a 100 TB crawl), so its
+    * DISTINCT shingle-hash set is broadcast — the corpus is never
+    * shuffled by shingle. The corpus side is one projection (a single
+    * shingle-kernel pass, k 8-byte hashes per position), a map-side
+    * broadcast probe, and one groupBy(doc_id) whose partial aggregation
+    * collapses each document's rows to one before the exchange, so the
+    * only shuffle carries ~n_docs count rows. Output (doc_id, n_ngrams,
+    * n_shared, contamination) for contaminated documents only; both
+    * counts are over the document's distinct shingle set and
+    * `contamination` is an exact integer-ratio double, so the operator is
+    * ANSI-SQL-expressible and DuckDB-oracled exactly (shingle-hash
+    * equality ≡ shingle-string equality: the chained-FNV shingle hash is
+    * injective on the corpus modulo 2⁻⁶⁴ collisions, and the ' '-join of
+    * whitespace-free tokens is injective — same argument as
+    * `ngramJaccardNearDups`'s oracle).
+    */
   def decontaminate(corpusIn: DataFrame, benchmark: DataFrame,
       k: Int = 3): DataFrame = {
     require(k >= 1, s"need k >= 1, got k=$k")
@@ -830,32 +728,17 @@ object Dedup {
     * containment |A∩B| / |B| ≥ `threshold` (A = document's distinct
     * word-k-gram set, B = the item's), with exact counts.
     *
-    * Full recall without all-pairs, via a prefix filter on the BENCHMARK
-    * side: under any fixed total order of an item's n_b shingles, if a
-    * document shares ≥ ⌈t·n_b⌉ of them, the shared elements cannot all
-    * fit in the suffix of size ⌈t·n_b⌉ − 1 — so the item's first
-    * n_b − ⌈t·n_b⌉ + 1 shingles (its prefix) contain at least one shared
-    * element, and an equi-join of benchmark PREFIXES against ALL corpus
-    * shingles misses no qualifying pair. The order is chosen rarest-in-
-    * corpus-first (corpus document frequency asc, hash asc), so prefix
-    * keys are the corpus-rarest shingles of each item and candidate
-    * volume is bounded by rare-key document frequencies.
-    *
-    * Scale shape: the benchmark side is tiny (evaluation suites vs a
-    * 100 TB crawl) — its shingle table, the df lookup for it, and the
-    * final prefix table all BROADCAST; the corpus is never shuffled by
-    * shingle. Three linear corpus passes, no corpus-sized shuffle:
-    * (1) df of benchmark shingles only — a broadcast semi-probe whose
-    * partial aggregation ships one count per matched shingle; (2) the
-    * candidate probe against the broadcast prefix; (3) the text fetch
-    * that joins the (small) deduped candidate set back for verification
-    * with the exact merge-count kernel. Re-scanning beats materializing
-    * a 100 TB tokenization, and the rare-prefix candidate bound is worth
-    * the extra tokenize pass over a hash-ordered single-pass prefix.
-    * Counts are over
+    * Shape: the benchmark side is tiny (evaluation suites against a crawl),
+    * so its shingle sets are collected and indexed once by
+    * `graft.sim.SetSimJoin.containment` (prefix filter over each item's
+    * rarest shingles, lossless), and the index is broadcast. The corpus
+    * side is one UDF + `explode` per document: each document is tokenized
+    * once and probes the index; no join and no shuffle. Counts are over
     * distinct shingle sets and `containment` is an integer-ratio double,
     * so the operator is ANSI-SQL-expressible and DuckDB-oracled exactly
     * (same hash/string injectivity argument as `ngramJaccardNearDups`).
+    *
+    * Precondition: `doc_id` is a unique long in `benchmark`.
     *
     * @return (doc_id, bench_id, n_bench, n_shared, containment), one row
     *         per qualifying pair; items with empty shingle sets pair
@@ -864,52 +747,22 @@ object Dedup {
   def decontaminateFuzzy(corpusIn: DataFrame, benchmark: DataFrame,
       k: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(k >= 1, s"need k >= 1, got k=$k")
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val corpus = graft.core.SparkUtil.spread(corpusIn)
     val shSet = udf((t: String) => TextHash.shingleHashSet(t, k))
-    val benchSh = graft.core.SparkUtil.materializeOnce(benchmark
-      .select(col("doc_id").as("bench_id"), explode(shSet(col("text"))).as("sh")))
-    val corpSh = corpus
-      .select(col("doc_id"), explode(shSet(col("text"))).as("sh"))
-    // corpus document frequency, computed for benchmark shingles only;
-    // a shingle absent from the corpus keeps df 0 (sorts first, matches
-    // nothing — recall unaffected: the prefix argument holds under ANY
-    // total order)
-    val dfreq = corpSh
-      .join(broadcast(benchSh.select("sh").distinct()), Seq("sh"))
-      .groupBy("sh").agg(count(lit(1)).as("df"))
-    val byItem = Window.partitionBy("bench_id")
-    val order = byItem.orderBy(col("df").asc, col("sh").asc)
-    // ceil guarded an ulp low, mirroring ngramJaccardNearDups: FP error
-    // can only LENGTHEN the prefix, never cost recall
-    val prefix = benchSh.join(dfreq, Seq("sh"), "left")
-      .na.fill(0L, Seq("df"))
-      .withColumn("n_b", count(lit(1)).over(byItem))
-      .withColumn("rn", row_number().over(order))
-      .filter(col("rn") <= col("n_b") - ceil(col("n_b") * threshold - 1e-9) + 1)
-      .select(col("sh"), col("bench_id"), col("n_b"))
-    val cand = corpSh.join(broadcast(prefix), Seq("sh"))
-      .select("doc_id", "bench_id", "n_b")
-      .dropDuplicates("doc_id", "bench_id")
-    // verify against PRECOMPUTED distinct shingle sets (same rewrite as
-    // ngramJaccardNearDups): one tokenize pass per side instead of
-    // re-running the shingle kernel twice per candidate pair; the
-    // benchmark arrays broadcast like the texts did. size(array_intersect)
-    // over the distinct sets equals shingleIntersectCount exactly.
-    val benchSets = benchmark
-      .select(col("doc_id").as("bench_id"), shSet(col("text")).as("sb"))
-    cand
-      .join(corpus.select(col("doc_id"), shSet(col("text")).as("sa")),
-        Seq("doc_id"))
-      .join(broadcast(benchSets), Seq("bench_id"))
-      .withColumn("n_shared",
-        size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("containment",
-        col("n_shared").cast("double") / col("n_b"))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_id"), col("bench_id"), col("n_b").as("n_bench"),
-        col("n_shared"), col("containment"))
+    val bench = benchmark.select(col("doc_id"), shSet(col("text"))).collect()
+    val sets = bench.map(_.getSeq[Long](1).toArray)
+    val index = SetSimJoin.containment(sets.toIndexedSeq, threshold)
+    val bc = corpusIn.sparkSession.sparkContext.broadcast(
+      (index, bench.map(_.getLong(0)), sets.map(_.length.toLong)))
+    val probe = udf { (t: String) =>
+      val (ix, benchIds, nBench) = bc.value
+      ix.probe(TextHash.shingleHashSet(t, k)).toSeq.map(m =>
+        (benchIds(m.index), nBench(m.index), m.inter.toLong, m.score))
+    }
+    graft.core.SparkUtil.spread(corpusIn)
+      .select(col("doc_id"), explode(probe(col("text"))).as("m"))
+      .select(col("doc_id"), col("m._1").as("bench_id"),
+        col("m._2").as("n_bench"), col("m._3").as("n_shared"),
+        col("m._4").as("containment"))
   }
 
   /** Survivor selection straight from a pair list, with no clustering:

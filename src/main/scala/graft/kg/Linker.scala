@@ -96,13 +96,14 @@ object Linker {
       .collect()
     val ids = dict.map(_.getString(0))
     val surfaces = dict.map(_.getString(1))
-    val index = SetSimJoin.build(
+    val index = SetSimJoin.jaccard(
       surfaces.map(TextHash.charTrigramSet).toIndexedSeq, jaccardMin)
     val bc = mentions.sparkSession.sparkContext.broadcast((index, ids, surfaces))
     val link = udf { (m: String) =>
       val (ix, conceptIds, labels) = bc.value
       ix.probe(TextHash.charTrigramSet(m)).toSeq.collect {
-        case (k, jaccard) if labels(k) != m => (conceptIds(k), jaccard)
+        case SetSimJoin.Match(k, _, jaccard) if labels(k) != m =>
+          (conceptIds(k), jaccard)
       }
     }
     mentions

@@ -65,11 +65,13 @@ object Curation {
     * @param minStopHits stage-2 stop-word floor — Gopher publishes 2; a
     *                   corpus-appropriate value belongs to the caller
     * @param scaleArms  stage-5 pair generation in its crawl-scale form:
-    *                   the shingle table is recomputed per consumer branch
-    *                   instead of materialized (`materializeShingles =
-    *                   false` — the zero-storage trade for inputs where
-    *                   ~8 B/token of executor-disk shingle spill is the
-    *                   binding cost). The pair set — and therefore every
+    *                   the (doc_id, shingle set) table is recomputed by
+    *                   each of its consumers (document frequencies, prefix,
+    *                   verify) instead of materialized once
+    *                   (`materializeShingles = false` — the zero-storage
+    *                   trade for inputs where ~8 B a shingle of
+    *                   executor-disk storage is the binding cost). The
+    *                   pair set — and therefore every
     *                   decision — is EQUAL by construction (the arms are
     *                   equality-tested on the standalone query, and the
     *                   composed equality is asserted in

@@ -148,12 +148,13 @@ class DedupSpec extends SparkSpec {
     // the motivating gap: the embedded pair's symmetric Jaccard is far
     // below any usable near-dup threshold — only containment sees it
     assert(TextHash.jaccardShingles(s"$filler $item", item, 3) < 0.1)
-    // benchmark prefix table must broadcast: the corpus is never
-    // shuffled by shingle at any scale
-    val plan = Dedup.decontaminateFuzzy(corpus, bench, k = 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"bench prefix must broadcast:\n${plan.take(1500)}")
+    // the benchmark index is broadcast and each corpus row probes it:
+    // the executed plan joins nothing and shuffles nothing by key
+    val q = Dedup.decontaminateFuzzy(corpus, bench, k = 3)
+    q.collect()
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("hashpartitioning"),
+      s"corpus must probe the broadcast index:\n${plan.take(1500)}")
   }
 
   test("decontaminateFuzzy EQUALS brute-force containment at two " +
