@@ -17,6 +17,12 @@ import java.nio.file.{Files, Paths}
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
   *      GRAFT_NOOP=1 to also time the noop-sink full materialization
   *      (guide §1.4).
+  *
+  * `kgscale=threads|executors [reps=3]` runs the KG scaling arm instead
+  * ([[kgScaling]]); `executors` needs spark-submit of the packaged jar:
+  *   sbt package && spark-submit --class graft.BenchExtra --master local[1] \
+  *     --driver-memory 2g target/scala-2.13/sssompyspark_2.13-0.1.0.jar \
+  *     kgscale=executors reps=3
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -27,6 +33,7 @@ object BenchExtra {
     }.toMap
     val tag = kv.getOrElse("tag", "before")
     val reps = kv.getOrElse("reps", "3").toInt
+    if (kv.contains("kgscale")) { kgScaling(kv("kgscale"), reps); return }
     val planDir = kv.get("plans").map(Paths.get(_))
     val names0 = args.filterNot(_.contains("="))
     val names = if (names0.isEmpty || names0.sameElements(Array("all")))
@@ -132,5 +139,68 @@ object BenchExtra {
       }
     }
     spark.stop()
+  }
+
+  /** Bench's KG scaling workload outside the frozen harness. Each draw is
+    * `Bench.kgRun`'s call, `buildGraph(extractMappings(…)).count()` over
+    * 8 turns per conversation and 2000 concepts (Bench.scala:98-104), in a
+    * session configured as Bench's scaling sessions: `session(threads,
+    * codegen = false, aqe = false, partsPerCore = 4)` (Bench.scala:66-95,
+    * called at :138), so 4 shuffle partitions per core, AQE and whole-stage
+    * codegen off. Per width (1, then 4): one session, one 1750-conversation
+    * warm-up (Bench's scale / 16), then `reps` rounds of 7000 and 28000
+    * conversations. Prints each cell's min seconds and jobs, the
+    * two-point fit fixed + per-conversation, and the 28000 efficiency
+    * T1 / (4 · T4). `threads` runs `local[N]`; `executors` runs
+    * `local-cluster[N,1,1536]`: N executor JVMs of one core each.
+    */
+  def kgScaling(mode: String, reps: Int): Unit = {
+    require(mode == "threads" || mode == "executors", s"kgscale=$mode")
+    val cells = Seq(1, 4).map { n =>
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      val spark = SparkSession.builder()
+        .master(if (mode == "threads") s"local[$n]" else s"local-cluster[$n,1,1536]")
+        .appName(s"graft-kgscale-$mode-$n")
+        .config("spark.sql.shuffle.partitions", (n * 4).toString)
+        .config("spark.default.parallelism", (n * 4).toString)
+        .config("spark.sql.adaptive.enabled", "false")
+        .config("spark.sql.codegen.wholeStage", "false")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      spark.sparkContext.setLogLevel("ERROR")
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      spark.sparkContext.addSparkListener(
+        new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet()
+        })
+      def draw(scale: Long): (Double, Int) = {
+        val cfg = graft.kg.KgPipeline.Config(outDir = "", nConv = scale,
+          turnsPerConv = 8, nConcepts = 2000L)
+        jobs.set(0)
+        val t0 = System.nanoTime()
+        graft.kg.KgPipeline.buildGraph(
+          graft.kg.KgPipeline.extractMappings(spark, cfg)).count()
+        ((System.nanoTime() - t0) / 1e9, jobs.get)
+      }
+      draw(28000L / 16)
+      val draws = (1 to reps).flatMap(_ => Seq(7000L, 28000L).map(c => c -> draw(c)))
+      spark.stop()
+      n -> draws.groupMap(_._1)(_._2).map { case (c, ds) =>
+        println(f"kgscale,$mode,$n,$c,min_s=${ds.map(_._1).min}%.3f," +
+          s"jobs=${ds.map(_._2).distinct.mkString("/")}," +
+          ds.map(d => f"${d._1}%.3f").mkString("[", " ", "]"))
+        c -> ds.map(_._1).min
+      }
+    }.toMap
+    cells.foreach { case (n, t) =>
+      val perConv = (t(28000L) - t(7000L)) / 21000
+      println(f"kgscale,$mode,$n,fit,fixed_s=${t(7000L) - 7000 * perConv}%.2f," +
+        f"per_conv_ms=${perConv * 1e3}%.3f")
+    }
+    println(f"kgscale,$mode,efficiency_28000=" +
+      f"${cells(1)(28000L) / (4 * cells(4)(28000L))}%.3f")
   }
 }

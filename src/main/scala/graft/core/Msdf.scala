@@ -122,19 +122,12 @@ final case class Msdf(
     copy(meta = newMeta)
   }
 
-  /** Canonical column + row ordering (reference `sort_df_rows_columns`,
-    * src/sssom/util.py:1600-1618): columns in schema slot order, rows
-    * ascending by that column sequence.
+  /** Canonical column order (the column half of the reference's
+    * `sort_df_rows_columns`, src/sssom/util.py:1600-1618): columns in
+    * schema slot order. `SssomTsv.write` sorts the rows it collects.
     */
-  def sortRowsColumns(byRows: Boolean = true): Msdf = {
-    val ordered = Schema.canonicalColumnOrder(df.columns.toSeq)
-    val projected = df.select(ordered.map(col): _*)
-    val sorted =
-      if (byRows && ordered.nonEmpty)
-        projected.orderBy(ordered.map(c => asc_nulls_last(c)): _*)
-      else projected
-    withDf(sorted)
-  }
+  def sortColumns(): Msdf =
+    withDf(df.select(Schema.canonicalColumnOrder(df.columns.toSeq).map(col): _*))
 
   /** All prefixes used in EntityReference columns + metadata (reference
     * `get_all_prefixes`, src/sssom/util.py:1621-1665).

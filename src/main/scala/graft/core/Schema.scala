@@ -47,7 +47,7 @@ object Schema {
 
   /** Canonical Mapping-class slot order per the public SSSOM schema
     * (sssom_schema.yaml `mapping` slot list). Drives column order of
-    * TSV output and `sortRowsColumns`.
+    * TSV output and `Msdf.sortColumns`.
     */
   val mappingSlots: Seq[String] = Seq(
     SubjectId, SubjectLabel, SubjectCategory, PredicateId, PredicateLabel,

@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -274,19 +274,56 @@ object SssomTsv {
     sb.result()
   }
 
+  /** Spark's `orderBy(asc_nulls_last(c))` over every column, in column
+    * order, as a driver comparator: strings by UTF-8 bytes, floating
+    * point with -0.0 == 0.0 and NaN largest, other numbers, booleans,
+    * dates and timestamps by value, nulls last. Any other column type
+    * (binary, arrays, structs, maps, intervals) throws rather than sort
+    * differently from Spark.
+    */
+  private[graft] def rowOrdering(schema: StructType): Ordering[Row] = {
+    val cmps = schema.fields.map { f =>
+      val cmp: (Any, Any) => Int = f.dataType match {
+        case StringType => (x, y) =>
+          if (x == y) 0 else if (SizeGate.u8Less(x.toString, y.toString)) -1 else 1
+        case DoubleType | FloatType => (x, y) =>
+          val a = x.asInstanceOf[Number].doubleValue
+          val b = y.asInstanceOf[Number].doubleValue
+          if (a == b) 0 else java.lang.Double.compare(a, b)
+        case _: NumericType | BooleanType | DateType | TimestampType |
+             TimestampNTZType => (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+        case t => throw new IllegalArgumentException(
+          s"cannot sort TSV column ${f.name} of type $t")
+      }
+      cmp
+    }
+    (a, b) => cmps.indices.iterator.map { i =>
+      (a.get(i), b.get(i)) match {
+        case (null, null) => 0
+        case (null, _) => 1
+        case (_, null) => -1
+        case (x, y) => cmps(i)(x, y)
+      }
+    }.find(_ != 0).getOrElse(0)
+  }
+
   /** Write an SSSOM TSV with embedded metadata header (reference
     * `write_table`, src/sssom/writers.py:84-121): condense, canonical
-    * sort, YAML header + TSV body. Single driver-composed file (the
+    * column order, YAML header + TSV body; the collected rows are sorted
+    * on the driver ([[rowOrdering]]), which costs no sample job or
+    * exchange. Single driver-composed file (the
     * reference emits one file; for data-scale output use the Parquet
     * node/edge sinks in graft.kg instead).
     */
   def write(msdf: Msdf, path: String, condense: Boolean = true,
       sort: Boolean = true): Unit = {
     val m1 = if (condense) msdf.condense() else msdf
-    val m2 = if (sort) m1.sortRowsColumns() else m1.sortRowsColumns(byRows = false)
+    val m2 = m1.sortColumns()
     val cols = m2.df.columns
     val header = cols.mkString("\t")
-    val body = m2.df.collect().map { row =>
+    val rows = m2.df.collect()
+    if (sort) java.util.Arrays.sort(rows, rowOrdering(m2.df.schema))
+    val body = rows.map { row =>
       cols.indices.map { i =>
         val v = row.get(i)
         if (v == null) "" else v match {

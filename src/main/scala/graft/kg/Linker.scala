@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   *  2. exact linking: broadcast join of mentions against the (small)
   *     dictionary on the normalized surface form — broadcast keeps the
   *     mention side shuffle-free, so hot (head-entity) surface forms never
-  *     concentrate on one task here; downstream hot-key aggregation is
-  *     handled by map-side partial aggregation + AQE skew-join in the
-  *     reconcile step (MergeReconcile.filterRedundantRows), not by salting;
+  *     concentrate on one task here;
   *  3. fuzzy linking: every (mention, concept) pair whose character-
   *     trigram Jaccard against the concept's label is ≥ a threshold,
   *     found losslessly by the prefix-filter join `graft.sim.SetSimJoin`

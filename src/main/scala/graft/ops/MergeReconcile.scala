@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.core._
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,9 +16,9 @@ import org.apache.spark.sql.types._
   *   - `remove_mappings` (src/sssom/util.py:292-316)
   *   - `compare_dataframes` diff (src/sssom/util.py:863-932)
   *
-  * Scale notes: groupBy-max + join-back replaces the reference's
-  * driver-side max map (map-side partial aggregation, AQE-splittable
-  * joins, no window partitions anywhere in the reconcile);
+  * Scale notes: the redundant-row filter replaces the reference's
+  * driver-side max map with one (subject_id, object_id) hash exchange
+  * and partition-local dedup + windows (no join);
   * the per-entity-pair negation reconcile runs as `flatMapGroups` keyed by
   * (subject_id, object_id) — group sizes are bounded by per-pair mapping
   * multiplicity (tiny), so the shuffle partitions evenly at any scale.
@@ -75,74 +76,54 @@ object MergeReconcile {
     val key = if (ignorePredicate) Seq(SubjectId, ObjectId)
       else Seq(SubjectId, ObjectId, PredicateId)
 
-    // group-max + join-back instead of the reference's collected max-dict.
-    // Deliberately NOT a window: window partitions get no partial
-    // aggregation and AQE never splits them, so one hot (S,O,P) key (10%
-    // head-entity mentions in the KG workload) floods a single task at
-    // scale. groupBy(max) combines map-side and the join-back is an AQE
-    // skew-splittable equi-join — same rows, skew-immune.
+    // Every decision is a fact about one (S,O) group: the max confidence
+    // per key, then the predicate ranks at each confidence. So the plan
+    // shuffles once, on (S,O), and the dedup and both windows below run
+    // inside that partitioning with no join and no further exchange.
     //
-    // The null-confidence bypass is fused into the join-back (r6): max()
-    // skips nulls, so group maxes over ALL rows equal the old nonNull-side
-    // maxes, and a LEFT join + (conf IS NULL OR conf >= max) filter emits
-    // exactly the old kept ∪ nanRows — null-conf rows pass (their group
-    // max may even be null), non-null rows keep the group-max test, and
-    // rows whose key columns contain NULL fail the equi-join and the >=
-    // against a null max exactly as they failed the old inner join. This
-    // removes the isNull/isNotNull double scan of the input and both
-    // localCheckpoint barriers: each upstream subtree below is consumed
-    // from two plan branches, but the branches are canonically identical,
-    // so AQE's shuffle-stage reuse executes each exchange once (verified
-    // in the executed plan: ReusedQueryStage/ReusedExchange nodes).
-    val maxes = df.groupBy(key.map(col): _*)
-      .agg(max(col(Confidence)).as("__max_conf"))
-    val confReconciled = df
-      .join(maxes, key, "left")
-      .filter(col(Confidence).isNull || col(Confidence) >= col("__max_conf"))
-      .drop("__max_conf")
-      .select(df.columns.map(col).toIndexedSeq: _*)
-      .dropDuplicates()
-
-    // Equal-confidence multi-predicate group pick, fused into ONE
-    // aggregation + ONE null-safe equi-join (replaces the groups agg +
-    // anti-join + semi-join + min agg + join-back + final dedup shape: 6
-    // exchanges and 3 branch-references over confReconciled became 2 and
-    // 2). Per (S,O,conf) group the agg computes
+    // Skew: a hot (S,O) lands in one task, once. The groupBy-max +
+    // join-back shape this replaced was no better: AQE split neither of
+    // its joins (each join's other side is an aggregate over a shuffle,
+    // not a shuffle stage), so one task read the hot key in each of two
+    // stages. Measured at local[4] on 400 k rows, one (S,O,P) holding
+    // 200 k, AQE on, broadcast off, skew threshold 1 KB, factor 2: the old
+    // plan ran 5 shuffle-read stages whose largest tasks read 221 537,
+    // 221 537, 118 117 and 63 759 records, in 1.6-2.1 s; this plan runs
+    // one, whose largest task reads 212 815, in 1.1-1.2 s. Window
+    // partitions spill; they do not fail on a hot key.
+    //
+    // The max is null where a key column is null, as the old left
+    // equi-join left it, so such rows keep only a null confidence. max()
+    // skips nulls, so null-confidence rows pass the >= filter's null
+    // branch and never raise a group's max.
+    val keyNotNull = key.map(col(_).isNotNull).reduce(_ && _)
+    // Per (S,O,conf) group:
     //   __n        — predicate count over non-"Not" rows with non-null
-    //                confidence (pandas groupby drops NaN keys, and the
-    //                =!= comparison drops null modifiers exactly like the
-    //                filter it replaces);
-    //   __min_rank — the hierarchy minimum over ALL rows of the group
-    //                (the semantics of the semi-join + min agg it fuses).
+    //                confidence (pandas groupby drops NaN keys; =!=
+    //                also leaves out null modifiers);
+    //   __min_rank — the hierarchy minimum over ALL rows of the group.
     // A row survives iff its group is not a multi-predicate group
-    // (__n <= 1 — null-conf rows always land here, their __n counts
-    // nothing) or it carries the group's best-ranked predicate. The join
-    // uses null-safe equality on every key so null subjects/objects/
-    // confidences match the groupBy keys they came from; one stats row
-    // exists per key, so row multiplicity is preserved and the input's
-    // distinctness makes the old trailing dropDuplicates a no-op.
+    // (__n <= 1; null-conf rows always land here) or it carries the
+    // group's best-ranked predicate.
     val rank = coalesce(
       element_at(typedLit(Schema.predicateRank), col(PredicateId)),
       lit(Int.MaxValue))
     val pmNotNot =
-      if (hasCol(confReconciled, PredicateModifier))
+      if (hasCol(df, PredicateModifier))
         col(PredicateModifier) =!= PredicateModifierNot
       else lit(true)
-    val stats = confReconciled
+    val byKey = Window.partitionBy(key.map(col): _*)
+    val byConf = Window.partitionBy(col(SubjectId), col(ObjectId), col(Confidence))
+    val result = df.repartition(col(SubjectId), col(ObjectId))
+      .dropDuplicates()
+      .withColumn("__max_conf", when(keyNotNull, max(col(Confidence)).over(byKey)))
+      .filter(col(Confidence).isNull || col(Confidence) >= col("__max_conf"))
       .withColumn("__rank", rank)
-      .groupBy(col(SubjectId), col(ObjectId), col(Confidence))
-      .agg(
-        count(when(pmNotNot && col(Confidence).isNotNull,
-          col(PredicateId))).as("__n"),
-        min(col("__rank")).as("__min_rank"))
-      .select(col(SubjectId).as("__s"), col(ObjectId).as("__o"),
-        col(Confidence).as("__c"), col("__n"), col("__min_rank"))
-    val result = confReconciled
-      .withColumn("__rank", rank)
-      .join(stats, col(SubjectId) <=> col("__s") &&
-        col(ObjectId) <=> col("__o") && col(Confidence) <=> col("__c"))
+      .withColumn("__n", count(when(pmNotNot && col(Confidence).isNotNull,
+        col(PredicateId))).over(byConf))
+      .withColumn("__min_rank", min(col("__rank")).over(byConf))
       .filter(col("__n") <= 1 || col("__rank") === col("__min_rank"))
-      .select(confReconciled.columns.map(col).toIndexedSeq: _*)
+      .select(df.columns.map(col).toIndexedSeq: _*)
     if (hadConf) result else result.drop(Confidence)
   }
 

@@ -76,14 +76,6 @@ object TextOps {
         (acc, w) => acc + greatest(lit(1L),
           ceil(length(w) / lit(6.0)).cast("long"))))
 
-  def analyzed(documents: DataFrame): DataFrame =
-    documents.select(col("doc_id"),
-      tokenCount(col("text")).as("n_tokens"),
-      subwordCount(col("text")).as("n_subwords"),
-      qualityScore(col("text")).as("quality"),
-      langId(col("text")).as("lang_pred"),
-      fingerprint(col("text")).as("fingerprint"))
-
   // PII patterns (the standard web-pipeline scrub set — C4/Dolma-style
   // regex redaction): kept to syntax that means the same thing in Java
   // regex (Spark) and RE2 (DuckDB) so the oracle is bit-exact

@@ -6,9 +6,10 @@ import org.apache.spark.sql.DataFrame
   * asserted against Catalyst's optimized/physical plans rather than
   * taken on faith — filter pushdown and column pruning reaching the
   * Parquet scans, broadcast joins where a side is dimension-sized, the
-  * reconcile staying window-free (the r1 skew finding), and the simhash
+  * reconcile shuffling once and joining nothing, and the simhash
   * banding staying aggregation-free after the join (the r2 dedup-shuffle
-  * finding). Skipped when the testdata directory is absent.
+  * finding). Tests over the testdata directory are skipped when it is
+  * absent.
   */
 class PlanAuditSpec extends SparkSpec {
 
@@ -41,11 +42,28 @@ class PlanAuditSpec extends SparkSpec {
       "removal keys are dimension-sized and must broadcast")
   }
 
-  test("reconcile is window-free; the window demo query is not") {
+  test("reconcile: one (subject, object) exchange, no join; window query windows") {
+    // over a checkpointed input, so every exchange in the plan is the
+    // reconcile's own; AQE on is the headline setting, off the scaling one
+    val in = graft.io.SssomTsv.read(spark,
+      getClass.getResource("/sssom/basic.tsv").getPath).df.localCheckpoint()
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      Seq(false, true).foreach { ignorePredicate =>
+        val df = graft.ops.MergeReconcile.filterRedundantRows(in, ignorePredicate)
+        df.collect()
+        // AQE prints its final plan, then the initial one: audit the final
+        val p = physical(df).split("== Initial Plan ==")(0)
+        val exchanges = "Exchange [a-z]+partitioning\\([^)]*\\)".r
+          .findAllIn(p).toSeq
+        assert(exchanges.size == 1 && exchanges.head.matches(
+          "Exchange hashpartitioning\\(subject_id#\\d+, object_id#\\d+, \\d+\\)"),
+          s"AQE $on, ignorePredicate $ignorePredicate:\n$p")
+        assert(!p.contains("Join"), p)
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assume(has)
-    assert(!logical(SparkEntry.queries("q_reconcile_sssom")(spark, dir))
-      .contains("Window"),
-      "filterRedundantRows must stay groupBy+join-back (no Window skew)")
     assert(logical(SparkEntry.queries("q_window_max_filter")(spark, dir))
       .contains("Window"))
   }

@@ -3,8 +3,10 @@ package graft.ops
 import graft.SparkSpec
 import graft.core._
 import graft.io.SssomTsv
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Pinned-count parity with the reference test-suite
   * (reference: tests/test_reconcile.py, tests/test_collapse.py,
@@ -33,6 +35,112 @@ class MergeReconcileSpec extends SparkSpec {
     val allNan = basic3.df.withColumn("confidence",
       lit(null).cast(DoubleType))
     assert(MergeReconcile.filterRedundantRows(allNan).count() == 11)
+  }
+
+  // A row of the generated mapping sets: (S, P, O, confidence, modifier,
+  // justification); None is a null cell.
+  private type M = (Option[String], Option[String], Option[String],
+    Option[Double], Option[String], String)
+
+  /** Plain-Scala model of util.py:693-779 in Spark's value semantics
+    * (a null cell is pandas' NaN; a Double.NaN confidence is a value that
+    * sorts above every other and equals itself; -0.0 == 0.0; a null
+    * modifier is not `!= "Not"`; a predicate outside the hierarchy ranks
+    * last, so a tie among unranked predicates keeps them all). Rows come
+    * back with -0.0 read as 0.0, since dedup keeps either one of a pair.
+    */
+  private def model(rows0: Seq[M], ignorePredicate: Boolean,
+      hadConf: Boolean): Seq[M] = {
+    def norm(c: Option[Double]) = c.map(d => if (d == 0.0) 0.0 else d)
+    val rows = rows0.map(r =>
+      r.copy(_4 = if (hadConf) norm(r._4) else Some(0.0)))
+    def cmp(a: Double, b: Double) =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+    // Scala's == never equates NaN: group and dedup on the double's bits
+    def bits(c: Option[Double]) = c.map(java.lang.Double.doubleToLongBits)
+    def key(r: M) = if (ignorePredicate) Seq(r._1, r._3)
+      else Seq(r._1, r._3, r._2)
+    val (nonNull, nanRows) = rows.partition(_._4.isDefined)
+    // pandas groupby drops null keys: those rows find no max
+    val maxConf = nonNull.filter(r => key(r).forall(_.isDefined))
+      .groupBy(key).map { case (k, g) =>
+        k -> g.map(_._4.get).reduce((a, b) => if (cmp(a, b) >= 0) a else b) }
+    val kept = nonNull.filter(r =>
+      maxConf.get(key(r)).exists(m => cmp(r._4.get, m) >= 0))
+    val reconciled = (kept ++ nanRows).distinctBy(r =>
+      (r._1, r._2, r._3, bits(r._4), r._5, r._6))
+    def group(r: M) = (r._1, r._3, bits(r._4))
+    val counted = reconciled.filter(r => r._5.exists(_ != "Not") &&
+      r._1.isDefined && r._3.isDefined && r._4.isDefined && r._2.isDefined)
+    val n = counted.groupBy(group).map { case (k, g) => k -> g.size }
+    def rank(r: M) =
+      r._2.flatMap(Schema.predicateRank.get).getOrElse(Int.MaxValue)
+    val minRank = reconciled.groupBy(group).map { case (k, g) =>
+      k -> g.map(rank).min }
+    reconciled.filter(r =>
+      n.getOrElse(group(r), 0) <= 1 || rank(r) == minRank(group(r)))
+  }
+
+  test("filterRedundantRows equals the util.py model on generated mapping sets") {
+    val ids = Gen.frequency(1 -> Gen.const(None: Option[String]),
+      6 -> Gen.oneOf("a", "b").map(Some(_)))
+    val objs = Gen.frequency(1 -> Gen.const(None: Option[String]),
+      6 -> Gen.oneOf("x", "y").map(Some(_)))
+    val preds = Gen.frequency(1 -> Gen.const(None: Option[String]),
+      8 -> Gen.oneOf(Schema.SkosExactMatch, Schema.SkosCloseMatch,
+        Schema.SkosBroadMatch, Schema.OwlEquivalentClass, "ex:unranked",
+        "ex:other").map(Some(_)))
+    val confs = Gen.frequency(2 -> Gen.const(None: Option[Double]),
+      8 -> Gen.oneOf(0.0, -0.0, 0.5, 0.8, 1.0, Double.NaN).map(Some(_)))
+    val mods = Gen.frequency(1 -> Gen.const(None: Option[String]),
+      4 -> Gen.const(Some("")), 2 -> Gen.const(Some("Not")))
+    val row: Gen[M] = for {
+      s <- ids; p <- preds; o <- objs; c <- confs; m <- mods
+      j <- Gen.oneOf("j1", "j2")
+    } yield (s, p, o, c, m, j)
+    // exact duplicates: some rows are drawn again
+    val rows = Gen.chooseNum(0, 14).flatMap(Gen.listOfN(_, row)).flatMap(rs =>
+      Gen.someOf(rs).map(rs ++ _))
+    val cases = for {
+      rs <- rows; hadConf <- Gen.oneOf(true, false)
+      hadMod <- Gen.oneOf(true, false)
+    } yield (rs, hadConf, hadMod)
+    val prop = Prop.forAll(cases) { case (rs0, hadConf, hadMod) =>
+      val rs = if (hadMod) rs0 else rs0.map(_.copy(_5 = Some("")))
+      val fields = Seq(
+        StructField("subject_id", StringType),
+        StructField("predicate_id", StringType),
+        StructField("object_id", StringType)) ++
+        (if (hadConf) Seq(StructField("confidence", DoubleType)) else Nil) ++
+        (if (hadMod) Seq(StructField("predicate_modifier", StringType)) else Nil) :+
+        StructField("mapping_justification", StringType)
+      val data = rs.map { case (s, p, o, c, m, j) =>
+        Row.fromSeq(Seq(s.orNull, p.orNull, o.orNull) ++
+          (if (hadConf) Seq(c.map(Double.box).orNull) else Nil) ++
+          (if (hadMod) Seq(m.orNull) else Nil) :+ j)
+      }
+      val df = spark.createDataFrame(
+        java.util.Arrays.asList(data: _*), StructType(fields))
+      Seq(false, true).forall { ignore =>
+        val out = MergeReconcile.filterRedundantRows(df, ignore)
+        val got = out.collect().toSeq.map { r =>
+          def str(c: String) = Option(r.getAs[String](c))
+          val conf =
+            if (hadConf) Option(r.getAs[java.lang.Double]("confidence"))
+              .map(d => if (d == 0.0) 0.0 else d.doubleValue)
+            else Some(0.0)
+          (str("subject_id"), str("predicate_id"), str("object_id"), conf,
+            if (hadMod) str("predicate_modifier") else Some(""),
+            r.getAs[String]("mapping_justification"))
+        }
+        val want = model(rs, ignore, hadConf)
+        def sorted(xs: Seq[M]) = xs.map(_.toString).sorted
+        out.columns.toSeq == df.columns.toSeq && sorted(got) == sorted(want)
+      }
+    }
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(r.passed, r.status.toString)
   }
 
   test("deal_with_negation basic3: 7, basic7: 12 (test_reconcile.py:36-41)") {
