@@ -2,8 +2,11 @@ package graft.dedup
 
 import graft.sim.SetSimJoin
 import graft.text.TextHash
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for training-data pipelines, each scaling to
   * shuffle-partitioned corpora:
@@ -20,9 +23,10 @@ import org.apache.spark.sql.functions._
   *    `graft.sim.SetSimJoin`;
   *  - repeated spans: positional k-gram substring dedup, coverage and
   *    removal;
-  *  - benchmark decontamination: exact shingle overlap (counting, flag-only
-  *    and Bloom arms) and per-item containment, the R–S shape of
-  *    `SetSimJoin`;
+  *  - benchmark decontamination: one per-document pass tokenizes each
+  *    corpus document once and probes a broadcast benchmark structure —
+  *    a sorted shingle array (exact counts and the flag-only arm), a
+  *    Bloom filter, or the per-item containment index of `SetSimJoin`;
   *  - embedding cosine: see graft.sim.Similarity.
   *
   * The set-similarity operators only tokenize and name columns: every
@@ -576,44 +580,6 @@ object Dedup {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
 
-  /** Flag-only arm of benchmark decontamination: (doc_id) rows for the
-    * documents sharing ≥ 1 `k`-gram with the benchmark — EXACTLY the
-    * doc set `decontaminate` emits (its n_shared ≥ 1 filter), without
-    * the per-doc counts. The benchmark's distinct shingle hashes are
-    * collected and broadcast as a flat sorted array (8 B/shingle —
-    * eval suites are small by construction; the crawl-vs-everything
-    * direction keeps the Bloom arm) and each corpus document answers
-    * with one map-side binary-searched exists() — no corpus-shingle
-    * explode, no per-doc aggregation exchange (guide §2.4/§3.2: the
-    * consumer that only needs the decision shuffles nothing). Used by
-    * the curation funnel's stage 4, whose decision column is the only
-    * thing it consumes; DecontaminateSpec pins set-equality with the
-    * counting arm.
-    *
-    * Precondition: `doc_id` is unique in `corpusIn`. Output is one row
-    * per contaminated corpus ROW (no grouping, so the plan stays
-    * aggregate-free); a repeated doc_id would repeat here, where
-    * `decontaminate` groups it to one row.
-    */
-  def contaminatedDocs(corpusIn: DataFrame, benchmark: DataFrame,
-      k: Int = 3): DataFrame = {
-    require(k >= 1, s"need k >= 1, got k=$k")
-    val spark = corpusIn.sparkSession
-    val corpus = graft.core.SparkUtil.spread(corpusIn)
-    val shSet = udf((t: String) => TextHash.shingleHashSet(t, k))
-    import spark.implicits._
-    val bench: Array[Long] = benchmark
-      .select(explode(shSet(col("text"))).as("sh")).distinct()
-      .as[Long].collect().sorted
-    val bc = spark.sparkContext.broadcast(bench)
-    val hit = udf { (t: String) =>
-      val arr = bc.value
-      TextHash.shingleHashSet(t, k)
-        .exists(h => java.util.Arrays.binarySearch(arr, h) >= 0)
-    }
-    corpus.filter(hit(col("text"))).select(col("doc_id"))
-  }
-
   /** Benchmark decontamination — the evaluation-set n-gram-overlap scan
     * from the published LM training-data methodology (GPT-3's 13-gram
     * test-set filter, Brown et al. 2020 appendix C; Dodge et al. 2021's
@@ -624,50 +590,52 @@ object Dedup {
     *
     * Scale shape: the benchmark side is tiny relative to the corpus
     * (evaluation suites are megabytes against a 100 TB crawl), so its
-    * DISTINCT shingle-hash set is broadcast — the corpus is never
-    * shuffled by shingle. The corpus side is one projection (a single
-    * shingle-kernel pass, k 8-byte hashes per position), a map-side
-    * broadcast probe, and one groupBy(doc_id) whose partial aggregation
-    * collapses each document's rows to one before the exchange, so the
-    * only shuffle carries ~n_docs count rows. Output (doc_id, n_ngrams,
-    * n_shared, contamination) for contaminated documents only; both
-    * counts are over the document's distinct shingle set and
-    * `contamination` is an exact integer-ratio double, so the operator is
-    * ANSI-SQL-expressible and DuckDB-oracled exactly (shingle-hash
-    * equality ≡ shingle-string equality: the chained-FNV shingle hash is
-    * injective on the corpus modulo 2⁻⁶⁴ collisions, and the ' '-join of
-    * whitespace-free tokens is injective — same argument as
-    * `ngramJaccardNearDups`'s oracle).
+    * distinct shingle hashes are collected and broadcast as a flat sorted
+    * array (8 B a shingle). Each corpus document is tokenized once and
+    * binary-searches its own distinct shingles in that array: one map
+    * pass, with no corpus-shingle explode, no join and no exchange by
+    * key. Output (doc_id, n_ngrams, n_shared, contamination) for
+    * contaminated documents only; both counts are over the document's
+    * distinct shingle set and `contamination` is an exact integer-ratio
+    * double, so the operator is ANSI-SQL-expressible and DuckDB-oracled
+    * exactly (shingle-hash equality ≡ shingle-string equality: the
+    * chained-FNV shingle hash is injective on the corpus modulo 2⁻⁶⁴
+    * collisions, and the ' '-join of whitespace-free tokens is injective
+    * — same argument as `ngramJaccardNearDups`'s oracle).
+    *
+    * Precondition: `doc_id` is unique in `corpusIn`. Output is one row
+    * per contaminated corpus ROW, so a repeated doc_id repeats.
     */
   def decontaminate(corpusIn: DataFrame, benchmark: DataFrame,
       k: Int = 3): DataFrame = {
     require(k >= 1, s"need k >= 1, got k=$k")
-    val corpus = graft.core.SparkUtil.spread(corpusIn)
-    val shSet = udf((t: String) => TextHash.shingleHashSet(t, k))
-    val benchSh = benchmark
-      .select(explode(shSet(col("text"))).as("sh")).distinct()
-      .withColumn("hit", lit(1))
-    val corpSh = corpus
-      .select(col("doc_id"), explode(shSet(col("text"))).as("sh"))
-    corpSh.join(broadcast(benchSh), Seq("sh"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_ngrams"), count(col("hit")).as("n_shared"))
-      .filter(col("n_shared") >= 1)
-      .withColumn("contamination",
-        col("n_shared").cast("double") / col("n_ngrams"))
+    val bench = benchShingles(benchmark, k).collect().map(_.getLong(0)).sorted
+    val bc = corpusIn.sparkSession.sparkContext.broadcast(bench)
+    overlapProbe(corpusIn, k, bc)(arr =>
+      h => java.util.Arrays.binarySearch(arr, h) >= 0)
   }
+
+  /** Flag-only arm of benchmark decontamination: the `doc_id` column of
+    * [[decontaminate]], i.e. the documents sharing ≥ 1 `k`-gram with the
+    * benchmark, in the same one-map-pass plan. The curation funnel's
+    * stage 4 consumes only this decision.
+    *
+    * Precondition: `doc_id` is unique in `corpusIn`.
+    */
+  def contaminatedDocs(corpusIn: DataFrame, benchmark: DataFrame,
+      k: Int = 3): DataFrame =
+    decontaminate(corpusIn, benchmark, k).select("doc_id")
 
   /** Bloom-filter arm of benchmark decontamination — the shape that holds
     * when the benchmark side outgrows a raw broadcast set. The exact arm
-    * above broadcasts the benchmark's distinct shingle hashes as a hashed
-    * relation: 8 bytes a shingle plus join-map overhead, fine for
-    * evaluation suites but not for the other standard use of the same
-    * scan — filtering a new crawl against EVERYTHING already trained on,
-    * where the "benchmark" is billions of shingles. A Bloom filter at
-    * `fpp` compresses that to ~1.44·log2(1/fpp) BITS per shingle (~10 bits
-    * at 1%: 1.2 GB per 10⁹ shingles vs tens of GB hashed), still one
-    * broadcast + a map-side probe — the corpus is never shuffled by
-    * shingle, same as the exact arm.
+    * above broadcasts the benchmark's distinct shingle hashes as a sorted
+    * array: 8 bytes a shingle, fine for evaluation suites but not for the
+    * other standard use of the same scan — filtering a new crawl against
+    * EVERYTHING already trained on, where the "benchmark" is billions of
+    * shingles. A Bloom filter at `fpp` compresses that to
+    * ~1.44·log2(1/fpp) BITS per shingle (~10 bits at 1%: 1.2 GB per 10⁹
+    * shingles against 8 GB as an array), still one broadcast and the same
+    * per-document map pass as the exact arm.
     *
     * Semantics: no false negatives — every truly contaminated document is
     * flagged and every true shared shingle counted (`mightContain` never
@@ -686,34 +654,27 @@ object Dedup {
     *
     * The filter is built by Spark's native `stat.bloomFilter` aggregate
     * (tree-aggregated `putLong`s, one pass over the benchmark) and shipped
-    * once as a broadcast variable; the probe is a Long→Boolean UDF —
-    * string-free, so the ScalaUDF bridge costs no boxing on the hot path.
+    * once as a broadcast variable; each corpus document is tokenized once
+    * and tests its distinct shingles with `mightContainLong`.
+    *
+    * Precondition: `doc_id` is unique in `corpusIn`.
     */
   def decontaminateBloom(corpusIn: DataFrame, benchmark: DataFrame,
       k: Int = 3, fpp: Double = 1e-4,
       expectedShingles: Long = 0L): DataFrame = {
     require(k >= 1, s"need k >= 1, got k=$k")
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1), got $fpp")
-    val corpus = graft.core.SparkUtil.spread(corpusIn)
-    val shSet = udf((t: String) => TextHash.shingleHashSet(t, k))
-    val benchSh = benchmark
-      .select(explode(shSet(col("text"))).as("sh")).distinct()
+    val benchSh = benchShingles(benchmark, k)
     // sizing: caller-provided estimate at real scale (a count() over 100 TB
     // of benchmark just to size a filter is wasteful — pipelines know their
     // suite sizes); fall back to an exact count at test/bench scale
-    val n = if (expectedShingles > 0L) expectedShingles
-      else math.max(benchSh.count(), 1L)
-    val bf = benchSh.stat.bloomFilter("sh", n, fpp)
-    val bfB = corpus.sparkSession.sparkContext.broadcast(bf)
-    val hit = udf((sh: Long) => bfB.value.mightContainLong(sh))
-    corpus
-      .select(col("doc_id"), explode(shSet(col("text"))).as("sh"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_ngrams"),
-        sum(when(hit(col("sh")), 1L).otherwise(0L)).as("n_shared"))
-      .filter(col("n_shared") >= 1)
-      .withColumn("contamination",
-        col("n_shared").cast("double") / col("n_ngrams"))
+    val n = if (expectedShingles > 0L) expectedShingles else benchSh.count()
+    // Spark's bloom-filter aggregate yields no filter for zero rows, and
+    // an empty benchmark contaminates nothing
+    val bf = if (n == 0L) BloomFilter.create(1L, fpp)
+      else benchSh.stat.bloomFilter("sh", n, fpp)
+    val bc = corpusIn.sparkSession.sparkContext.broadcast(bf)
+    overlapProbe(corpusIn, k, bc)(f => f.mightContainLong)
   }
 
   /** Fuzzy (near-match) benchmark decontamination — the containment arm
@@ -732,13 +693,15 @@ object Dedup {
     * so its shingle sets are collected and indexed once by
     * `graft.sim.SetSimJoin.containment` (prefix filter over each item's
     * rarest shingles, lossless), and the index is broadcast. The corpus
-    * side is one UDF + `explode` per document: each document is tokenized
-    * once and probes the index; no join and no shuffle. Counts are over
-    * distinct shingle sets and `containment` is an integer-ratio double,
-    * so the operator is ANSI-SQL-expressible and DuckDB-oracled exactly
-    * (same hash/string injectivity argument as `ngramJaccardNearDups`).
+    * side is the same per-document pass as the exact arm: each document
+    * is tokenized once and probes the index; no join and no shuffle.
+    * Counts are over distinct shingle sets and `containment` is an
+    * integer-ratio double, so the operator is ANSI-SQL-expressible and
+    * DuckDB-oracled exactly (same hash/string injectivity argument as
+    * `ngramJaccardNearDups`).
     *
-    * Precondition: `doc_id` is a unique long in `benchmark`.
+    * Precondition: `doc_id` is a unique long in `benchmark`, and unique
+    * in `corpusIn`.
     *
     * @return (doc_id, bench_id, n_bench, n_shared, containment), one row
     *         per qualifying pair; items with empty shingle sets pair
@@ -753,17 +716,50 @@ object Dedup {
     val index = SetSimJoin.containment(sets.toIndexedSeq, threshold)
     val bc = corpusIn.sparkSession.sparkContext.broadcast(
       (index, bench.map(_.getLong(0)), sets.map(_.length.toLong)))
-    val probe = udf { (t: String) =>
+    perDocument(corpusIn, k) { sh =>
       val (ix, benchIds, nBench) = bc.value
-      ix.probe(TextHash.shingleHashSet(t, k)).toSeq.map(m =>
+      ix.probe(sh).toSeq.map(m =>
         (benchIds(m.index), nBench(m.index), m.inter.toLong, m.score))
-    }
-    graft.core.SparkUtil.spread(corpusIn)
-      .select(col("doc_id"), explode(probe(col("text"))).as("m"))
-      .select(col("doc_id"), col("m._1").as("bench_id"),
-        col("m._2").as("n_bench"), col("m._3").as("n_shared"),
-        col("m._4").as("containment"))
+    }.select(col("doc_id"), col("p._1").as("bench_id"),
+      col("p._2").as("n_bench"), col("p._3").as("n_shared"),
+      col("p._4").as("containment"))
   }
+
+  /** The benchmark's distinct shingle hashes, one `sh` row each. */
+  private def benchShingles(benchmark: DataFrame, k: Int): DataFrame = {
+    val shSet = udf((t: String) => TextHash.shingleHashSet(t, k))
+    benchmark.select(explode(shSet(col("text"))).as("sh")).distinct()
+  }
+
+  /** The one corpus pass of every decontamination arm: spread the corpus,
+    * tokenize each document once into its distinct sorted shingle-hash
+    * set, and explode what `probe` returns for that set as column `p`.
+    * `probe` answers with a `Seq` (empty for a clean document) rather than
+    * a struct that a later filter drops: Catalyst pushes such a filter
+    * below the projection and so calls the UDF twice a row.
+    */
+  private def perDocument[R: TypeTag](corpusIn: DataFrame, k: Int)(
+      probe: Array[Long] => Seq[R]): DataFrame = {
+    val f = udf((t: String) => probe(TextHash.shingleHashSet(t, k)))
+    graft.core.SparkUtil.spread(corpusIn)
+      .select(col("doc_id"), explode(f(col("text"))).as("p"))
+  }
+
+  /** (doc_id, n_ngrams, n_shared, contamination) for the documents with
+    * at least one shingle that `member(bc.value)` accepts. The count is a
+    * `while` loop over the primitive array: a `Long => Boolean` passed to
+    * `count` or `exists` boxes every shingle.
+    */
+  private def overlapProbe[T](corpusIn: DataFrame, k: Int,
+      bc: Broadcast[T])(member: T => Long => Boolean): DataFrame =
+    perDocument(corpusIn, k) { sh =>
+      val in = member(bc.value)
+      var n = 0L; var i = 0
+      while (i < sh.length) { if (in(sh(i))) n += 1; i += 1 }
+      if (n == 0L) Nil else Seq((sh.length.toLong, n))
+    }.select(col("doc_id"), col("p._1").as("n_ngrams"),
+      col("p._2").as("n_shared"),
+      (col("p._2").cast("double") / col("p._1")).as("contamination"))
 
   /** Survivor selection straight from a pair list, with no clustering:
     * drop every document that appears as the higher id (`doc_b`) of some

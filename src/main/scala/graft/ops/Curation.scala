@@ -107,9 +107,9 @@ object Curation {
 
     // stage 4 — benchmark decontamination: the funnel consumes only the
     // FLAG, so the flag-only arm applies — one map-side broadcast-set
-    // probe, no corpus-shingle explode, no per-doc aggregation exchange
-    // (doc set identical to `decontaminate`'s n_shared >= 1 output;
-    // DecontaminateSpec pins the equality)
+    // probe per document, no join, no aggregation exchange (doc set
+    // identical to `decontaminate`'s; DedupSpec "contaminatedDocs
+    // (flag-only arm) emits exactly the counting arm's doc set" pins it)
     val cont = Dedup.contaminatedDocs(corpus, benchmark, decontamK)
       .select(col("doc_id"), lit(true).as("contaminated"))
 

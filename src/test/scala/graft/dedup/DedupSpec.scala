@@ -2,7 +2,9 @@ package graft.dedup
 
 import graft.SparkSpec
 import graft.text.TextHash
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Dedup-operator specs. The LSH variants are verified against brute
   * force: simhash banding guarantees FULL recall at the requested Hamming
@@ -35,7 +37,22 @@ class DedupSpec extends SparkSpec {
 
   private lazy val docsDf = docs.toDF("doc_id", "text")
 
-  test("decontaminate: exact overlap counts, broadcast bench side") {
+  /** The per-document probe's plan: no join, no aggregate, and no
+    * exchange but `SparkUtil.spread`'s round-robin one — the corpus is
+    * never shuffled by shingle or by doc_id.
+    */
+  private def assertOneMapPass(df: DataFrame): Unit = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    val exchanges = plan.split("\n").filter(_.contains("Exchange"))
+    assert(!plan.contains("Join") && !plan.contains("HashAggregate") &&
+      !plan.contains("hashpartitioning") &&
+      exchanges.forall(_.contains("RoundRobinPartitioning")),
+      s"decontamination must stay one map pass:\n${plan.take(1500)}")
+  }
+
+  test("decontaminate: exact overlap counts; exact and Bloom arms plan " +
+      "one map pass (no join, aggregate or key exchange)") {
     val bench = Seq(
       (1000L, "alpha beta gamma delta"), // shingles {abg, bgd}
       (1001L, "solo")                    // short-doc fallback shingle
@@ -51,12 +68,63 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(out == Set((1L, 2L, 1L, 0.5), (3L, 2L, 2L, 1.0),
       (4L, 1L, 1L, 1.0)))
-    // the benchmark shingle set must broadcast: the corpus side is never
-    // shuffled by shingle at any scale
-    val plan = Dedup.decontaminate(corpus, bench, k = 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"bench shingles must broadcast:\n${plan.take(1500)}")
+    assertOneMapPass(Dedup.decontaminate(corpus, bench, k = 3))
+    assertOneMapPass(Dedup.decontaminateBloom(corpus, bench, k = 3))
+    val bench2 = docsDf.filter(col("doc_id") % 5 === 0)
+    val corpus2 = docsDf.filter(col("doc_id") % 5 =!= 0)
+    assertOneMapPass(Dedup.decontaminate(corpus2, bench2, k = 3))
+    assertOneMapPass(Dedup.decontaminateBloom(corpus2, bench2, k = 3))
+  }
+
+  test("decontaminate EQUALS a plain-Scala model on generated corpora " +
+      "(null, empty, one-word, repeated and embedding texts; k = 1, 3, 8); " +
+      "contaminatedDocs is its doc set and the Bloom arm a superset") {
+    val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps")
+    val phrase = Gen.choose(1, 12).flatMap(Gen.listOfN(_, word))
+      .map(_.mkString(" "))
+    val text: Gen[Option[String]] = Gen.frequency(1 -> Gen.const(None),
+      1 -> Gen.const(Some("")), 2 -> word.map(Some(_)),
+      6 -> phrase.map(Some(_)))
+    // a corpus text: fresh, a benchmark item verbatim, or one embedded
+    // between two phrases; then some texts repeat under new ids
+    def corpusText(bench: Seq[Option[String]]): Gen[Option[String]] =
+      if (bench.isEmpty) text
+      else Gen.frequency(4 -> text, 1 -> Gen.oneOf(bench), 3 -> (for {
+        b <- Gen.oneOf(bench); pre <- phrase; post <- phrase
+      } yield Some(s"$pre ${b.getOrElse("")} $post")))
+    val cases = for {
+      k <- Gen.oneOf(1, 3, 8)
+      bench <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, text))
+      own <- Gen.choose(0, 10).flatMap(Gen.listOfN(_, corpusText(bench)))
+      again <- Gen.someOf(own)
+    } yield (k, bench, own ++ again)
+    def df(texts: Seq[Option[String]], from: Long) =
+      texts.zipWithIndex.map { case (t, i) => (from + i, t) }
+        .toDF("doc_id", "text")
+    val prop = Prop.forAll(cases) { case (k, benchTexts, corpusTexts) =>
+      val benchSet = benchTexts
+        .flatMap(t => TextHash.shingleHashSet(t.orNull, k)).toSet
+      val model = corpusTexts.zipWithIndex.flatMap { case (t, i) =>
+        val sh = TextHash.shingleHashSet(t.orNull, k)
+        val n = sh.count(benchSet.contains).toLong
+        if (n == 0L) None
+        else Some((i.toLong, sh.length.toLong, n, n.toDouble / sh.length))
+      }.toSet
+      val (corpus, bench) = (df(corpusTexts, 0L), df(benchTexts, 1000L))
+      val exact = Dedup.decontaminate(corpus, bench, k)
+        .as[(Long, Long, Long, Double)].collect().toSet
+      val flag = Dedup.contaminatedDocs(corpus, bench, k)
+        .as[Long].collect().toSet
+      val bloom = Dedup.decontaminateBloom(corpus, bench, k)
+        .as[(Long, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
+      exact == model && flag == model.map(_._1) &&
+        model.forall { case (id, nGrams, nShared, _) =>
+          bloom.get(id).exists(b => b._2 == nGrams && b._3 >= nShared)
+        }
+    }
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(r.passed, r.status.toString)
   }
 
   test("contaminatedDocs (flag-only arm) emits exactly the counting " +

@@ -68,14 +68,21 @@ class IncrementalSpec extends SparkSpec {
     assert(merged == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
   }
 
-  test("string ids (CURIE-shaped) take the distributed CC path and still " +
-      "match the full recompute") {
+  test("string ids (CURIE-shaped): the union-find and the distributed " +
+      "base labelings, and mergeDelta over each, equal the full recompute") {
     val base = Seq(("A:1", "B:1"), ("B:2", "C:7")).toDF("src", "dst")
     val delta = Seq(("B:1", "B:2"), ("D:9", "D:8")).toDF("src", "dst")
-    val merged = Incremental.mergeDelta(
-      Components.connectedComponents(base), delta)
-      .as[(String, String)].collect().toMap
-    assert(merged == Map("A:1" -> "A:1", "B:1" -> "A:1", "B:2" -> "A:1",
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String)].collect().toMap
+    val local = Components.connectedComponents(base)
+    val distributed = Components.connectedComponents(base, localCutoff = 0)
+    val fullBase = Map("A:1" -> "A:1", "B:1" -> "A:1", "B:2" -> "B:2",
+      "C:7" -> "B:2")
+    assert(labels(local) == fullBase && labels(distributed) == fullBase)
+    val full = labels(Components.connectedComponents(base.union(delta)))
+    assert(full == Map("A:1" -> "A:1", "B:1" -> "A:1", "B:2" -> "A:1",
       "C:7" -> "A:1", "D:9" -> "D:8", "D:8" -> "D:8"))
+    for (baseLabels <- Seq(local, distributed))
+      assert(labels(Incremental.mergeDelta(baseLabels, delta)) == full)
   }
 }
